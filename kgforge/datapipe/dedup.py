@@ -460,7 +460,13 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3, n_bands: int =
     SimHash UDF subtree once per side; this form evaluates it once
     (measured row-identical, first-run ~2x). Buckets are near-dup
     groups keyed by an exact 16-bit hash chunk; pair volume per bucket
-    is identical to the join's."""
+    is identical to the join's.
+
+    Bucket size: a 16-bit chunk has 65,536 values, so besides true
+    near-dups each bucket collects about n/65536 documents by chance,
+    and each bucket is held as ONE array row — memory per task grows
+    with the largest bucket. A ``doc_id`` that appears in several rows
+    never pairs with itself (``doc_a != doc_b``)."""
     hashed = documents.select("doc_id", simhash_udf(F.col("text")).alias("sh"))
     chunk_bits = 64 // n_bands
     chunks = hashed.select(
@@ -495,6 +501,7 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3, n_bands: int =
             F.col("a.sh").alias("sh_a"),
             F.col("b.sh").alias("sh_b"),
         )
+        .filter(F.col("doc_a") != F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))

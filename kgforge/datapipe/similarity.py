@@ -45,64 +45,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-# --- codegen fast path for the cosine fold (round 6) -----------------
-# HigherOrderFunction `aggregate` is interpreted: the lambda is
-# evaluated element-by-element per row, which at 64 dims x hundreds of
-# thousands of candidate pairs dominated the rescore stages. When the
-# arrays are statically DEFAULT_DIM long, the SAME float64 operation
-# sequence — ((0.0 + a1*b1) + a2*b2) + ... , strictly left-associated
-# like the fold — is emitted as a flat Add chain that whole-stage
-# codegen compiles. Bit-identical by construction (identical IEEE op
-# order, so the oracle's floor(cosine*1e4) can never diverge); arrays
-# of any OTHER length fall back to the interpreted fold, preserving
-# legacy semantics (incl. zip_with null-padding on length mismatch).
-
-
-def _dot_fast(a, b, dim: int = DEFAULT_DIM):
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.element_at(a, i + 1) * F.element_at(b, i + 1)
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), acc).otherwise(_dot(a, b))
-
-
-def _norm_fast(a, dim: int = DEFAULT_DIM):
-    acc = F.lit(0.0)
-    for i in range(dim):
-        v = F.element_at(a, i + 1)
-        acc = acc + v * v
-    return F.when(F.size(a) == dim, F.sqrt(acc)).otherwise(_norm(a))
-
-
-# Fold selection (r6 third pass, measured): the flat Add chain wins at
-# steady state (warm rescore ~1-1.5 s -> ~0.4 s on 569k pairs) but its
-# whole-stage-codegen COMPILATION costs ~1-2 s per stage, paid once per
-# plan — and a single-shot session (the bench suite, a one-off query)
-# runs each plan exactly once. First-run A/B in fresh sessions
-# (scripts/r06_sim_firstrun_ab.py, alternating, 3 reps/arm): interpreted
-# beats codegen on every entry at bench scale — cosine 2.30 vs 3.65 s,
-# near-dups 2.93 vs 4.24 s, IVF 1.29 vs 2.15 s. At 5x corpus the two
-# arms are a first-run wash (12.6/13.6 vs 10.1/15.0 s alternating) and
-# codegen leads only on warm laps. Default is therefore the interpreted
-# fold; set KGFORGE_COSINE_CODEGEN=1 for long-lived/iterative jobs
-# whose warm rescore volume amortizes the compile. Both arms are
-# bit-identical (identical IEEE op order, pytest-pinned), so the
-# switch can never change results.
-def _fold_dot(a, b):
-    import os
-
-    if os.environ.get("KGFORGE_COSINE_CODEGEN", "0") == "1":
-        return _dot_fast(a, b)
-    return _dot(a, b)
-
-
-def _fold_norm(a):
-    import os
-
-    if os.environ.get("KGFORGE_COSINE_CODEGEN", "0") == "1":
-        return _norm_fast(a)
-    return _norm(a)
-
-
 def cosine_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """All (query, candidate) cosine similarities; callers rank/filter.
     Deliberately a cross join — the exact-verification arm, never the
@@ -121,9 +63,9 @@ def cosine_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     # norms are per-VECTOR quantities: compute them once per side
     # before the pair explosion instead of twice per pair (identical
     # float values — same op sequence per vector)
-    q = q.withColumn("qn", _fold_norm(F.col("qv")))
-    c = c.withColumn("cn", _fold_norm(F.col("cv")))
-    sim = _fold_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    q = q.withColumn("qn", _norm(F.col("qv")))
+    c = c.withColumn("cn", _norm(F.col("cv")))
+    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
     return (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -157,12 +99,12 @@ def _rescore_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double(F.col("embedding")).alias("qv"),
-    ).withColumn("qn", _fold_norm(F.col("qv")))
+    ).withColumn("qn", _norm(F.col("qv")))
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         _as_double(F.col("embedding")).alias("cv"),
-    ).withColumn("cn", _fold_norm(F.col("cv")))
-    sim = _fold_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    ).withColumn("cn", _norm(F.col("cv")))
+    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
     scored = (
         cand.join(q, "query_id")
         .join(c, "neighbor_id")
@@ -205,12 +147,6 @@ def _quantize_np(embs) -> np.ndarray:
     form can never drift between the LSH/IVF kernels and the oracles."""
     return np.stack(
         [np.floor(np.asarray(v, dtype=np.float64) * QUANT_SCALE).astype(np.int64) for v in embs]
-    )
-
-
-def _int_dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v
     )
 
 
@@ -451,14 +387,13 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.999) -> DataFra
     the oracle/verification arm."""
     cand = lsh_candidate_pairs(vectors)
     # per-vector norms computed before the pair join (once per vector,
-    # not twice per collided pair), dot product via the codegen fast
-    # path — both bit-identical to the interpreted fold (see _dot_fast)
+    # not twice per collided pair)
     v = vectors.select("vec_id", _as_double(F.col("embedding")).alias("v")).withColumn(
-        "nrm", _fold_norm(F.col("v"))
+        "nrm", _norm(F.col("v"))
     )
     a = v.select(F.col("vec_id").alias("doc_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = v.select(F.col("vec_id").alias("doc_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    sim = _fold_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    sim = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")

@@ -283,19 +283,3 @@ def detect_mentions_dictionary(
             F.explode("mentions").alias("mention"),
         )
     )
-
-
-def turn_entities(transcripts: DataFrame) -> DataFrame:
-    """Stable per-turn entity ids under the turn-ordering invariant:
-    subj = urn:turn:{conv_id}:{turn_idx} (window ordering on
-    (conv_id, turn_idx) per BASELINE.json north_star)."""
-    return transcripts.select(
-        F.concat(
-            F.lit("urn:turn:"), F.col("conv_id"), F.lit(":"), F.col("turn_idx").cast("string")
-        ).alias("turn_iri"),
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-    )

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import StructField, StructType
 
 
 def _fixpoint_partitions(spark, n_rows: int, rows_per_partition: int = 10_000) -> int:
@@ -161,9 +162,7 @@ class ClosureNotConverged(RuntimeError):
 # Broadcast the doubling frontier only while it is provably small; a
 # frontier row is (p, c, dist) = 3 longs, so 1M rows is ~40 MB framed —
 # comfortably under the 8 GB broadcast cap with headroom for executors.
-CLOSURE_BROADCAST_MAX_ROWS = int(
-    __import__("os").environ.get("KGFORGE_CLOSURE_BCAST_ROWS", "1000000")
-)
+CLOSURE_BROADCAST_MAX_ROWS = 1_000_000
 
 
 # ------------------------------------------------------------------ closure
@@ -224,7 +223,8 @@ def transitive_closure(
     the 37 deepest pairs at sf0.1).
 
     ``stats`` (optional dict) records the measured loop shape — rounds
-    and per-round delta sizes — for scale-curve evidence
+    and per-round delta sizes, one entry per round including the last,
+    so ``len(delta_sizes) == rounds`` — for scale-curve evidence
     (scripts/closure_scale_curve.py). Costs one count per round; leave
     None in production.
     """
@@ -343,14 +343,12 @@ def transitive_closure(
             # per-round isEmpty() job the r5 loop ran is redundant.
             exact = new.filter(F.col("dist") == (1 << (i + 1)))
             n_exact = exact.count()
+            if stats is not None:
+                stats.setdefault("delta_sizes", []).append(n_new)
             if n_exact == 0:
                 if stats is not None:
                     stats["rounds"] = i + 1
-                    if n_new:
-                        stats.setdefault("delta_sizes", []).append(n_new)
                 break
-            if stats is not None:
-                stats.setdefault("delta_sizes", []).append(n_new)
         else:
             raise ClosureNotConverged(
                 f"no fixpoint after {max_iterations} doubling rounds"
@@ -378,7 +376,9 @@ def transitive_closure_seminaive(
     path-count intermediate would blow up on dense graphs; loses badly
     on long chains. Raises rather than silently truncating at the cap
     — with the default 64-round cap this variant dropped the 37
-    deepest pairs of the sf0.1 fixture graph (diameter > 64)."""
+    deepest pairs of the sf0.1 fixture graph (diameter > 64).
+    ``stats`` follows :func:`transitive_closure`'s contract; the final
+    round's delta is the empty one."""
     spark = edges.sparkSession
     base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=True)
     parts = _fixpoint_partitions(spark, base.count() * 8)
@@ -397,6 +397,7 @@ def transitive_closure_seminaive(
             if new.isEmpty():
                 if stats is not None:
                     stats["rounds"] = i + 1
+                    stats.setdefault("delta_sizes", []).append(0)
                 return closure
             if stats is not None:
                 stats.setdefault("delta_sizes", []).append(new.count())
@@ -617,205 +618,7 @@ def connected_components_star(
     raise ClosureNotConverged(f"star contraction not stable after {max_iterations} rounds")
 
 
-def strongly_connected_components(
-    edges: DataFrame, max_iterations: int = 64, max_walk_steps: int = 1024
-) -> DataFrame:
-    """(node, scc) — coloring/peeling SCC (Orzan-style), the
-    condensation primitive for :func:`transitive_closure_condensed`:
-
-    per outer round over the still-unassigned subgraph:
-      1. forward-propagate the MAX node id to a fixpoint — c(v) = the
-         largest id that reaches v (including v itself);
-      2. nodes with c(v) == v are color roots, and SCC(r) is exactly the
-         set backward-reachable from r through edges whose endpoints
-         BOTH carry color r (they reach r forward by definition of the
-         color, and r reaches them by the backward walk);
-      3. assign, peel, repeat.
-
-    Every round assigns at least every color root, so the loop
-    terminates; worst case is O(#SCCs) outer rounds (a descending-id
-    chain peels one per round) and O(graph depth) single-step inner
-    rounds (``max_walk_steps`` caps each propagation/walk; both raise
-    ClosureNotConverged rather than silently truncating). That profile
-    fits BOM-shaped data, whose cycles are few and shallow — for deep
-    acyclic reaches prefer the direct :func:`transitive_closure`
-    (doubling covers 2^24 path length); a production all-cases SCC
-    would use divide-and-conquer forward-backward on top of the same
-    two reachability kernels. All steps are joins/aggregates with
-    per-round localCheckpoint, no driver-side graph state.
-    """
-    spark = edges.sparkSession
-    e_all = (
-        edges.select("parent", "child")
-        .filter(F.col("parent") != F.col("child"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    parts = _fixpoint_partitions(spark, e_all.count())
-    nodes = (
-        edges.select(F.col("parent").alias("node"))
-        .unionByName(edges.select(F.col("child").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    assigned = nodes.select("node", F.lit(None).cast("string").alias("scc")).filter(
-        F.lit(False)
-    )
-    active = nodes
-    with _constraint_propagation_off(spark, parts):
-        for _ in range(max_iterations):
-            if active.isEmpty():
-                return assigned
-            ae = (
-                e_all.join(active.withColumnRenamed("node", "parent"), "parent")
-                .join(active.withColumnRenamed("node", "child"), "child")
-                .select("parent", "child")
-                .localCheckpoint(eager=True)
-            )
-            # 1. forward max-color fixpoint
-            color = active.withColumn("color", F.col("node")).localCheckpoint(eager=True)
-            for _f in range(max_walk_steps):
-                pushed = (
-                    ae.join(
-                        color.select(
-                            F.col("node").alias("parent"), F.col("color").alias("pcolor")
-                        ),
-                        "parent",
-                    )
-                    .groupBy(F.col("child").alias("node"))
-                    .agg(F.max("pcolor").alias("pmax"))
-                )
-                nxt = (
-                    color.join(pushed, "node", "left")
-                    .select(
-                        "node",
-                        F.greatest(F.col("color"), F.coalesce("pmax", "color")).alias("color"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                changed = (
-                    nxt.alias("n")
-                    .join(color.alias("c"), "node")
-                    .filter(F.col("n.color") != F.col("c.color"))
-                )
-                stable = changed.isEmpty()
-                color = nxt
-                if stable:
-                    break
-            else:  # pragma: no cover
-                raise ClosureNotConverged("SCC forward coloring did not stabilize")
-            # 2. backward walk from the roots inside each color class
-            ce = (
-                ae.join(
-                    color.select(F.col("node").alias("parent"), F.col("color").alias("pc")),
-                    "parent",
-                )
-                .join(
-                    color.select(F.col("node").alias("child"), F.col("color").alias("cc")),
-                    "child",
-                )
-                .filter(F.col("pc") == F.col("cc"))
-                .select("parent", "child", F.col("pc").alias("color"))
-                .localCheckpoint(eager=True)
-            )
-            reached = (
-                color.filter(F.col("node") == F.col("color"))
-                .select("node", F.col("color").alias("scc"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = reached
-            for _b in range(max_walk_steps):
-                step = (
-                    ce.join(
-                        frontier.select(F.col("node").alias("child"), "scc"), "child"
-                    )
-                    .filter(F.col("color") == F.col("scc"))
-                    .select(F.col("parent").alias("node"), "scc")
-                    .dropDuplicates()
-                    .join(reached.select("node"), "node", "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                if step.isEmpty():
-                    break
-                reached = reached.unionByName(step)
-                frontier = step
-            else:  # pragma: no cover
-                raise ClosureNotConverged("SCC backward walk did not stabilize")
-            assigned = assigned.unionByName(reached).localCheckpoint(eager=True)
-            active = active.join(reached.select("node"), "node", "left_anti").localCheckpoint(
-                eager=True
-            )
-        if active.isEmpty():
-            return assigned
-        raise ClosureNotConverged(f"SCC peeling not finished after {max_iterations} rounds")
-
-
-def transitive_closure_condensed(edges: DataFrame) -> DataFrame:
-    """G4 via SCC condensation — the scale path for *cyclic* graphs:
-    contract every strongly connected component to one supernode, run
-    the delta-doubling closure on the (acyclic, usually far smaller)
-    condensation DAG, then expand supernode pairs back to member pairs.
-
-    Why it scales: inside an SCC of size k the raw closure holds all
-    k x k pairs, and every fixpoint round of a direct closure re-shuffles
-    them; after contraction they cost nothing until the final expansion
-    join (which is output-sized, irreducible). Semantics equal
-    :func:`transitive_closure` exactly (pytest vs Python DFS and the
-    direct closure): intra-SCC pairs (including self-pairs — the
-    reference DFS emits (x, x) inside cycles), plus self-loops, plus
-    member-expanded DAG-closure pairs.
-    """
-    scc = strongly_connected_components(edges).localCheckpoint(eager=True)
-    by_parent = scc.select(F.col("node").alias("parent"), F.col("scc").alias("scc_p"))
-    by_child = scc.select(F.col("node").alias("child"), F.col("scc").alias("scc_c"))
-    dag_edges = (
-        edges.join(by_parent, "parent")
-        .join(by_child, "child")
-        .filter(F.col("scc_p") != F.col("scc_c"))
-        .select(F.col("scc_p").alias("parent"), F.col("scc_c").alias("child"))
-        .dropDuplicates()
-    )
-    dag_closure = transitive_closure(dag_edges)
-    members = scc.select(F.col("scc").alias("grp"), F.col("node").alias("member"))
-    sizes = members.groupBy("grp").agg(F.count("*").alias("n"))
-    multi = members.join(sizes.filter(F.col("n") > 1).select("grp"), "grp")
-    intra = (
-        multi.select("grp", F.col("member").alias("parent"))
-        .join(multi.select("grp", F.col("member").alias("child")), "grp")
-        .select("parent", "child")
-    )
-    self_loops = edges.filter(F.col("parent") == F.col("child")).select(
-        "parent", "child"
-    ).dropDuplicates()
-    inter = (
-        dag_closure.join(
-            members.select(F.col("grp").alias("parent"), F.col("member").alias("mp")),
-            "parent",
-        )
-        .join(
-            members.select(F.col("grp").alias("child"), F.col("member").alias("mc")),
-            "child",
-        )
-        .select(F.col("mp").alias("parent"), F.col("mc").alias("child"))
-    )
-    return intra.unionByName(inter).unionByName(self_loops).dropDuplicates()
-
-
-# ------------------------------------------------------------------ leaf/root
-def leaf_parts(entities: DataFrame, edges: DataFrame) -> DataFrame:
-    """G7: parts that are never a parent (FILTER NOT EXISTS analogue)."""
-    return entities.select("number").join(
-        edges.select(F.col("parent").alias("number")).dropDuplicates(), "number", "left_anti"
-    )
-
-
-def root_parts(entities: DataFrame, edges: DataFrame) -> DataFrame:
-    """G7: parts that are never a child."""
-    return entities.select("number").join(
-        edges.select(F.col("child").alias("number")).dropDuplicates(), "number", "left_anti"
-    )
-
-
+# ------------------------------------------------------------------ placeholders
 def missing_parts(entities: DataFrame, edges: DataFrame) -> DataFrame:
     """J4: edge endpoints with no entity row -> MissingPart placeholders
     (Neo4j MERGE ... ON CREATE SET partType='MissingPart', :672-679)."""
@@ -1003,31 +806,45 @@ def evolves_to(versions: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------ level-stack
-def level_stack_decode(rows: DataFrame, max_level: int | None = None) -> DataFrame:
+def level_stack_decode(rows: DataFrame, attrs: tuple[str, ...] = ()) -> DataFrame:
     """G1 (spreadsheet_loader.py:1160-1182): order-dependent decode of a
     (group_id, row_idx, level, number) hierarchy — keep a stack of the
     last-seen part per level; a row at level L emits edge
-    (stack[L-1] -> number) and clears deeper levels.
+    (stack[L-1] -> number) and clears deeper levels. Any ``attrs``
+    columns ride the child row onto the emitted edge (reference
+    parse_part_usage :1262-1318 carries quantity/uom/find_number).
 
     Implemented with grouped ``applyInPandas`` (Arrow-batched, stateful
     *within* a group, groups are bounded: one sheet / one conversation)
     — the one place per-group sequential state is inherent (SURVEY §7.4).
+    Exact on every input, including stale-stack shapes the window form
+    cannot express; the output schema follows the input's ``number``
+    and ``attrs`` types.
     """
+    attr_fields = [rows.schema[a] for a in attrs]
+    out_schema = StructType(
+        [
+            StructField("parent", rows.schema["number"].dataType),
+            StructField("child", rows.schema["number"].dataType),
+            *attr_fields,
+        ]
+    )
+    cols = ["level", "number", *attrs]
 
     def decode(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("row_idx")
         stack: dict[int, str] = {}
         out = []
-        for level, number in zip(pdf["level"], pdf["number"]):
+        for level, number, *extra in zip(*(pdf[c] for c in cols)):
             lvl = int(level)
             if lvl > 0 and (lvl - 1) in stack:
-                out.append((stack[lvl - 1], number))
+                out.append((stack[lvl - 1], number, *extra))
             stack[lvl] = number
             for deeper in [k for k in stack if k > lvl]:
                 del stack[deeper]
-        return pd.DataFrame(out, columns=["parent", "child"])
+        return pd.DataFrame(out, columns=["parent", "child", *attrs])
 
-    return rows.groupBy("group_id").applyInPandas(decode, schema="parent string, child string")
+    return rows.groupBy("group_id").applyInPandas(decode, schema=out_schema)
 
 
 def level_stack_decode_window(
@@ -1057,79 +874,6 @@ def level_stack_decode_window(
         .filter(F.col("parent").isNotNull())
         .select("parent", F.col("number").alias("child"), *attrs)
     )
-
-
-def level_stack_decode_usage(rows: DataFrame) -> DataFrame:
-    """G1 with usage attributes (reference parse_part_usage
-    :1262-1318): the stack decode, carrying quantity/uom/find_number
-    from the child row onto the emitted edge."""
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_idx")
-        stack: dict[int, str] = {}
-        out = []
-        for level, number, qty, uom, fn in zip(
-            pdf["level"], pdf["number"], pdf["quantity"], pdf["uom"], pdf["find_number"]
-        ):
-            lvl = int(level)
-            if lvl > 0 and (lvl - 1) in stack:
-                out.append((stack[lvl - 1], number, qty, uom, fn))
-            stack[lvl] = number
-            for deeper in [k for k in stack if k > lvl]:
-                del stack[deeper]
-        return pd.DataFrame(
-            out, columns=["parent", "child", "quantity", "uom", "find_number"]
-        )
-
-    return rows.groupBy("group_id").applyInPandas(
-        decode,
-        schema="parent string, child string, quantity bigint, uom string, find_number string",
-    )
-
-
-def level_stack_decode_usage_window(rows: DataFrame, max_level: int) -> DataFrame:
-    """Usage decode as pure window expressions: the usage attributes ride
-    on the child row itself, so this is just the window decoder carrying
-    three extra columns. No Python crossing — the production path at
-    10^12 rows (one shuffle by group, whole-stage codegen); pytest
-    asserts full-row equivalence with the general applyInPandas
-    decoder on the fixture hierarchy."""
-    return level_stack_decode_window(
-        rows, max_level, attrs=("quantity", "uom", "find_number")
-    )
-
-
-def _level_stack_decode_stateful(rows: DataFrame, attrs: tuple[str, ...]) -> DataFrame:
-    """General stateful decoder with arbitrary pass-through ``attrs``
-    (the :func:`level_stack_decode` loop, attr columns riding the child
-    row). Exact on every input, including stale-stack shapes the window
-    form cannot express."""
-    from pyspark.sql.types import StructField, StructType
-
-    attr_fields = [rows.schema[a] for a in attrs]
-    out_schema = StructType(
-        [
-            StructField("parent", rows.schema["number"].dataType),
-            StructField("child", rows.schema["number"].dataType),
-            *attr_fields,
-        ]
-    )
-    cols = ["level", "number", *attrs]
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_idx")
-        stack: dict[int, str] = {}
-        out = []
-        for level, number, *extra in zip(*(pdf[c] for c in cols)):
-            lvl = int(level)
-            if lvl > 0 and (lvl - 1) in stack:
-                out.append((stack[lvl - 1], number, *extra))
-            stack[lvl] = number
-            for deeper in [k for k in stack if k > lvl]:
-                del stack[deeper]
-        return pd.DataFrame(out, columns=["parent", "child", *attrs])
-
-    return rows.groupBy("group_id").applyInPandas(decode, schema=out_schema)
 
 
 def level_stack_decode_routed(
@@ -1169,7 +913,7 @@ def level_stack_decode_routed(
     clean = tagged.filter(~F.col("__viol")).drop("__viol")
     dirty = tagged.filter(F.col("__viol")).drop("__viol")
     return level_stack_decode_window(clean, max_level, attrs).unionByName(
-        _level_stack_decode_stateful(dirty, attrs)
+        level_stack_decode(dirty, attrs)
     )
 
 

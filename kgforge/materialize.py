@@ -161,15 +161,6 @@ def top_assemblies(edges: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def multi_use_parts(edges: DataFrame, threshold: int = 5) -> DataFrame:
-    """A5: parts used in more than ``threshold`` assemblies (HAVING)."""
-    return (
-        edges.groupBy("child")
-        .agg(F.count("*").alias("n_assemblies"))
-        .filter(F.col("n_assemblies") > threshold)
-    )
-
-
 def deepest_paths(khop: DataFrame) -> DataFrame:
     """A9: max reached depth per root (verify_snowmobile_graph.py:224-236)."""
     return khop.groupBy("root").agg(F.max("depth").alias("max_depth"))

@@ -1,9 +1,10 @@
 """Scalar normalization & validation (SURVEY.md §2.2, P1-P15).
 
 Everything here is a *column expression* (JVM-side, whole-stage codegen)
-except the two byte-exactness-critical functions — float-repr part-number
-normalization and IRI percent-encoding — which also exist as vectorized
-pandas UDFs for exact parity with the reference's Python behavior
+except the two byte-exactness-critical functions: float-repr part-number
+normalization has a pure-Python twin for the test oracle, and IRI
+percent-encoding also exists as a vectorized pandas UDF, both for exact
+parity with the reference's Python behavior
 (/root/reference/src/utils/spreadsheet_loader.py:35-42, :881).
 """
 
@@ -30,12 +31,6 @@ def normalize_part_number_py(value) -> str:
             return str(int(value))
         return str(value)
     return str(value)
-
-
-@pandas_udf(StringType())
-def normalize_part_number_udf(s: pd.Series) -> pd.Series:
-    """Vectorized P1 for object columns that may still carry floats."""
-    return s.map(normalize_part_number_py)
 
 
 def normalize_number_col(col: Column) -> Column:
@@ -68,13 +63,7 @@ def iri_encode_col(col: Column) -> Column:
     return F.replace(F.replace(col, F.lit(" "), F.lit("%20")), F.lit("#"), F.lit("%23"))
 
 
-# ---------------------------------------------------------------- P2/P3
-def clean_str(col: Column) -> Column:
-    """Null-safe trimmed string (reference _safe_get_string semantics)."""
-    return F.when(F.trim(col) == "", None).otherwise(F.trim(col))
-
-
-# ---------------------------------------------------------------- P6-P8
+# ---------------------------------------------------------------- P6-P7
 INVALID_NUMBER_CHARS = r'[<>:"|?*\x00-\x1f]'
 MAX_NUMBER_LEN = 50
 MAX_NAME_LEN = 200
@@ -93,11 +82,6 @@ def truncate_number_col(col: Column) -> Column:
 def valid_name_col(col: Column) -> Column:
     """P7 (validation.py:250-265)."""
     return col.isNotNull() & (col != "") & (F.length(col) <= MAX_NAME_LEN)
-
-
-def non_self_loop(parent: Column, child: Column) -> Column:
-    """P8 (validation.py:267-280)."""
-    return parent != child
 
 
 # ---------------------------------------------------------------- P4

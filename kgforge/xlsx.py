@@ -218,13 +218,6 @@ def _sheet_grid(
     return grid
 
 
-def sheet_names(path: str) -> List[str]:
-    with zipfile.ZipFile(path) as zf:
-        root = ET.fromstring(zf.read("xl/workbook.xml"))
-        sheets = root.find(_NS + "sheets")
-        return [s.get("name", "") for s in sheets.findall(_NS + "sheet")]
-
-
 def read_workbook(path: str, render_dates: bool = False) -> Dict[str, List[List]]:
     """Read every sheet of an .xlsx into {sheet_name: grid-of-values}.
 
@@ -322,20 +315,3 @@ class Table:
     def first_row_values(self) -> List:
         return list(self.rows[0]) if self.rows else []
 
-
-def load_table(
-    path: str, sheet: str, skiprows: int = 4, render_dates: bool = False
-) -> Optional[Table]:
-    """Reference read pattern: try skiprows, fall back to a plain read if empty.
-
-    Mirrors spreadsheet_loader.py:59-61 — ``pd.read_excel(..., skiprows=4)``
-    then, if the frame is empty or has no columns, a re-read with no skip.
-    """
-    wb = read_workbook(path, render_dates=render_dates)
-    if sheet not in wb:
-        return None
-    grid = wb[sheet]
-    t = Table(grid, skiprows=skiprows)
-    if t.empty or not t.columns:
-        t = Table(grid, skiprows=0)
-    return t

@@ -41,6 +41,18 @@ def test_simhash_near_dups_finds_injected_clones(spark, sf_dir):
     assert clones <= pairs  # identical texts -> hamming 0
 
 
+def test_simhash_near_dups_never_pairs_a_doc_id_with_itself(spark):
+    """A doc_id that appears in two rows (a re-ingested document) shares
+    every bucket with its twin row; it must not pair with itself."""
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, text), (1, text), (2, text), (3, "an unrelated line about spark jobs")],
+        "doc_id long, text string",
+    )
+    pairs = {(r.doc_a, r.doc_b) for r in dd.simhash_near_dups(docs).collect()}
+    assert pairs == {(1, 2)}
+
+
 def test_minhash_lsh_finds_injected_clones(spark, sf_dir):
     cand = dd.lsh_candidate_pairs(dd.docs_with_dups(_docs(spark, sf_dir)))
     pairs = {(r.doc_a, r.doc_b) for r in cand.collect()}

@@ -4,14 +4,23 @@ for performance keeps its exact pre-change semantics.
 - transitive_closure: exact-prefix doubling + integer node encoding
   (cast fast path AND dictionary fallback) against the semi-naive
   reference and hand-built expectations (nulls, cycles, cast-collision
-  labels, dtype preservation);
+  labels, dtype preservation); both closures record one
+  ``delta_sizes`` entry per round;
 - minhash_band_keys / lsh_candidate_pairs: row-identical to the r5
   banding formulation (explicitly re-built here);
+- simhash_near_dups bucket enumeration: row-identical to the
+  chunk-equality self-join formulation;
+- lang_id array argmax: equal to the when-chain formulation;
 - repeated_spans array run-split: equal to the r5 window formulation;
 - simhash batch kernel: bit-identical to the scalar reference on edge
   cases the corpus test cannot hit;
 - spread_scan: fires only when the scan is narrower than half the
-  session parallelism, and never changes rows.
+  session parallelism, and never changes rows;
+- string warm-up: the warmed session still runs string pandas UDFs.
+
+The cosine rescore has one implementation (the interpreted
+``aggregate`` fold in ``datapipe.similarity``); its values are pinned
+by the gate's ANN and near-dup entries, not here.
 """
 
 from __future__ import annotations
@@ -68,12 +77,20 @@ def test_closure_exact_prefix_matches_seminaive_on_cycles_and_chains(spark):
     )
     df = spark.createDataFrame(rows, "parent string, child string")
     stats: dict = {}
+    sem_stats: dict = {}
     got = {(r.parent, r.child) for r in graph.transitive_closure(df, stats=stats).collect()}
-    sem = {(r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()}
+    sem = {
+        (r.parent, r.child)
+        for r in graph.transitive_closure_seminaive(df, stats=sem_stats).collect()
+    }
     assert got == sem
     # doubling: ceil(log2(diameter)) rounds, far fewer than the 21-round chain
     assert 1 <= stats["rounds"] <= 7
     assert ("a", "a") in got and ("s", "s") in got
+    # every round is recorded, the last one included
+    for st in (stats, sem_stats):
+        assert len(st["delta_sizes"]) == st["rounds"]
+    assert sem_stats["delta_sizes"][-1] == 0
 
 
 # ------------------------------------------------------------ minhash
@@ -288,55 +305,3 @@ def test_string_warm_batch_fn_and_warmed_session_run_string_udfs(spark):
         .collect()
     )
     assert sorted(r.n for r in rows) == [1, 5]
-
-
-# ------------------------------------------------------- cosine fast path
-
-
-def test_cosine_fast_path_bit_identical_and_fallback_arms(spark):
-    """_dot_fast/_norm_fast emit the fold's exact float64 op sequence as
-    a flat codegen chain when arrays are DEFAULT_DIM long, and fall back
-    to the interpreted HOF fold on any other shape. Compared bitwise
-    (cast to string via %.17g would round — compare the doubles raw and
-    the oracle-facing floor(x*1e4) form) across: 64-dim vectors with
-    negative/zero/denormal-ish components, shorter arrays, mismatched
-    lengths, and NULL arrays."""
-    import math
-    import random
-
-    from kgforge.datapipe.similarity import (
-        DEFAULT_DIM,
-        _dot,
-        _dot_fast,
-        _norm,
-        _norm_fast,
-    )
-
-    rng = random.Random(7)
-
-    def vec(n):
-        return [rng.uniform(-1, 1) * (10 ** rng.randint(-6, 2)) for _ in range(n)]
-
-    rows = [
-        (vec(DEFAULT_DIM), vec(DEFAULT_DIM)),
-        ([0.0] * DEFAULT_DIM, [-0.0] * DEFAULT_DIM),
-        (vec(8), vec(8)),                 # short: fallback arm
-        (vec(DEFAULT_DIM), vec(8)),       # mismatched: zip_with null-pad
-        (None, vec(DEFAULT_DIM)),         # null array
-        (vec(DEFAULT_DIM), None),
-    ]
-    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    got = df.select(
-        _dot_fast(F.col("a"), F.col("b")).alias("df"),
-        _dot(F.col("a"), F.col("b")).alias("ds"),
-        _norm_fast(F.col("a")).alias("nf"),
-        _norm(F.col("a")).alias("ns"),
-    ).collect()
-    for r in got:
-        for fast, slow in ((r.df, r.ds), (r.nf, r.ns)):
-            if slow is None or (isinstance(slow, float) and math.isnan(slow)):
-                assert fast is None or math.isnan(fast)
-            else:
-                # bitwise equality, not approx: identical op order
-                assert math.copysign(1, fast) == math.copysign(1, slow)
-                assert fast == slow and str(fast) == str(slow)

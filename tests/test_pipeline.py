@@ -9,6 +9,10 @@ from pyspark.sql import functions as F
 
 from kgforge import extract, fixtures, graph, linking, resume
 
+# usage attributes the child row carries onto its edge (reference
+# parse_part_usage)
+USAGE_ATTRS = ("quantity", "uom", "find_number")
+
 
 def test_strict_mode_raises(spark, sf_dir):
     t = fixtures.load_transcripts(spark, sf_dir)
@@ -69,12 +73,15 @@ def test_level_stack_routed_exact_on_stale_stack_groups(spark, sf_dir):
 
     # fixture hierarchy (all clean groups): router == stateful, with attrs
     h = fixtures.load_hierarchy(spark, sf_dir)
-    a = {tuple(r) for r in graph.level_stack_decode_usage(h).dropDuplicates().collect()}
+    a = {
+        tuple(r)
+        for r in graph.level_stack_decode(h, attrs=USAGE_ATTRS).dropDuplicates().collect()
+    }
     b = {
         tuple(r)
-        for r in graph.level_stack_decode_routed(
-            h, max_level=2, attrs=("quantity", "uom", "find_number")
-        ).dropDuplicates().collect()
+        for r in graph.level_stack_decode_routed(h, max_level=2, attrs=USAGE_ATTRS)
+        .dropDuplicates()
+        .collect()
     }
     assert a == b
 
@@ -106,10 +113,13 @@ def test_usage_window_matches_applyinpandas(spark, sf_dir):
     """The gate's JVM-only usage decode must equal the general stateful
     decoder — full rows including the carried usage attributes."""
     rows = fixtures.load_hierarchy(spark, sf_dir)
-    a = {tuple(r) for r in graph.level_stack_decode_usage(rows).dropDuplicates().collect()}
+    a = {
+        tuple(r)
+        for r in graph.level_stack_decode(rows, attrs=USAGE_ATTRS).dropDuplicates().collect()
+    }
     b = {
         tuple(r)
-        for r in graph.level_stack_decode_usage_window(rows, max_level=2)
+        for r in graph.level_stack_decode_window(rows, max_level=2, attrs=USAGE_ATTRS)
         .dropDuplicates()
         .collect()
     }
@@ -339,34 +349,62 @@ def test_cc_star_matches_label_propagation_on_long_chain(spark):
     assert star["n0150"] == "n0000" and star["z3"] == "z1"
 
 
+def _random_digraph(seed: int, n: int, m: int) -> list[tuple[str, str]]:
+    import random
+
+    rng = random.Random(seed)
+    return list(
+        {
+            (f"n{rng.randrange(n):03d}", f"n{rng.randrange(n):03d}")
+            for _ in range(m)
+        }
+    )
+
+
 def test_closure_variants_agree_with_python_dfs(spark):
     """Delta path-doubling and semi-naive closures must both equal a
-    pure-Python DFS on a graph with a cycle, a diamond, and a chain
-    (reference cycle-guard semantics, spreadsheet_loader.py:1002-1005)."""
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"),        # cycle
-        ("d", "e"), ("d", "f"), ("e", "g"), ("f", "g"),  # diamond
-        ("h", "i"), ("i", "j"), ("j", "k"),        # chain
-        ("g", "h"),
+    pure-Python DFS (reference cycle-guard semantics,
+    spreadsheet_loader.py:1002-1005) on two graphs: a cycle, a diamond
+    and a chain; and nested cycles (a 3-cycle feeding a 2-cycle) with a
+    self-loop, DAG tails and a random digraph, whose intra-cycle
+    self-pairs (x, x) both closures must emit."""
+    graphs = [
+        [
+            ("a", "b"), ("b", "c"), ("c", "a"),        # cycle
+            ("d", "e"), ("d", "f"), ("e", "g"), ("f", "g"),  # diamond
+            ("h", "i"), ("i", "j"), ("j", "k"),        # chain
+            ("g", "h"),
+        ],
+        [
+            ("a", "b"), ("b", "c"), ("c", "a"),          # 3-cycle
+            ("c", "d"), ("d", "e"), ("e", "d"),          # 2-cycle off the 3-cycle
+            ("e", "f"), ("x", "a"), ("s", "s"),          # tail in, tail out, self-loop
+            ("p", "q"), ("q", "r"),                      # separate chain
+        ] + _random_digraph(3, 15, 25),
     ]
-    adj: dict[str, list[str]] = {}
-    for p, c in edges:
-        adj.setdefault(p, []).append(c)
-    want = set()
-    for start in {p for p, _ in edges} | {c for _, c in edges}:
-        stack, seen = list(adj.get(start, [])), set()
-        while stack:
-            n = stack.pop()
-            if n in seen:
-                continue
-            seen.add(n)
-            want.add((start, n))
-            stack.extend(adj.get(n, []))
-    df = spark.createDataFrame(edges, "parent string, child string")
-    doubling = {(r.parent, r.child) for r in graph.transitive_closure(df).collect()}
-    seminaive = {(r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()}
-    assert doubling == want
-    assert seminaive == want
+    for edges in graphs:
+        adj: dict[str, list[str]] = {}
+        for p, c in edges:
+            adj.setdefault(p, []).append(c)
+        want = set()
+        for start in {p for p, _ in edges} | {c for _, c in edges}:
+            stack, seen = list(adj.get(start, [])), set()
+            while stack:
+                n = stack.pop()
+                if n in seen:
+                    continue
+                seen.add(n)
+                want.add((start, n))
+                stack.extend(adj.get(n, []))
+        df = spark.createDataFrame(edges, "parent string, child string")
+        doubling = {(r.parent, r.child) for r in graph.transitive_closure(df).collect()}
+        seminaive = {
+            (r.parent, r.child) for r in graph.transitive_closure_seminaive(df).collect()
+        }
+        assert doubling == want
+        assert seminaive == want
+    # the nested-cycle graph (last): intra-cycle and self-loop self-pairs
+    assert {("s", "s"), ("a", "a"), ("d", "d")} <= doubling
 
 
 def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):
@@ -756,103 +794,6 @@ def test_cypher_payload_serializes_temporal_and_binary():
     assert got["ts"] == "2026-01-02 03:04:05"
     assert got["d"] == "2026-01-02"
     assert got["q"] == "1.50"
-
-
-def _random_digraph(seed: int, n: int, m: int) -> list[tuple[str, str]]:
-    import random
-
-    rng = random.Random(seed)
-    return list(
-        {
-            (f"n{rng.randrange(n):03d}", f"n{rng.randrange(n):03d}")
-            for _ in range(m)
-        }
-    )
-
-
-def _tarjan_scc(edges: list[tuple[str, str]]) -> dict[str, str]:
-    """Iterative Tarjan; component label = max member id (matching the
-    coloring algorithm's root choice)."""
-    adj: dict[str, list[str]] = {}
-    nodes = set()
-    for a, b in edges:
-        nodes.update((a, b))
-        if a != b:
-            adj.setdefault(a, []).append(b)
-    index: dict[str, int] = {}
-    low: dict[str, int] = {}
-    on_stack: set[str] = set()
-    stack: list[str] = []
-    sccs: list[list[str]] = []
-    counter = [0]
-
-    def strongconnect(v0):
-        work = [(v0, 0)]
-        while work:
-            v, pi = work.pop()
-            if pi == 0:
-                index[v] = low[v] = counter[0]
-                counter[0] += 1
-                stack.append(v)
-                on_stack.add(v)
-            recurse = False
-            succs = adj.get(v, [])
-            for i in range(pi, len(succs)):
-                w = succs[i]
-                if w not in index:
-                    work.append((v, i + 1))
-                    work.append((w, 0))
-                    recurse = True
-                    break
-                if w in on_stack:
-                    low[v] = min(low[v], index[w])
-            if not recurse:
-                if low[v] == index[v]:
-                    comp = []
-                    while True:
-                        w = stack.pop()
-                        on_stack.discard(w)
-                        comp.append(w)
-                        if w == v:
-                            break
-                    sccs.append(comp)
-                if work:
-                    parent = work[-1][0]
-                    low[parent] = min(low[parent], low[v])
-
-    for v in sorted(nodes):
-        if v not in index:
-            strongconnect(v)
-    return {v: max(comp) for comp in sccs for v in comp}
-
-
-def test_scc_matches_tarjan_on_random_digraphs(spark):
-    from kgforge import graph as g
-
-    for seed, n, m in [(7, 24, 40), (13, 18, 45)]:
-        edges = _random_digraph(seed, n, m)
-        df = spark.createDataFrame(edges, "parent string, child string")
-        got = {r.node: r.scc for r in g.strongly_connected_components(df).collect()}
-        want = _tarjan_scc(edges)
-        assert got == want, f"seed={seed}: diff={ {k: (got.get(k), want[k]) for k in want if got.get(k) != want[k]} }"
-
-
-def test_condensed_closure_matches_direct(spark):
-    """SCC-condensed closure == delta-doubling closure == Python DFS on
-    a graph with nested cycles, a self-loop, and DAG tails."""
-    from kgforge import graph as g
-
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"),          # 3-cycle
-        ("c", "d"), ("d", "e"), ("e", "d"),          # 2-cycle off the 3-cycle
-        ("e", "f"), ("x", "a"), ("s", "s"),          # tail in, tail out, self-loop
-        ("p", "q"), ("q", "r"),                      # separate chain
-    ] + _random_digraph(3, 15, 25)
-    df = spark.createDataFrame(edges, "parent string, child string")
-    direct = {(r.parent, r.child) for r in g.transitive_closure(df).collect()}
-    condensed = {(r.parent, r.child) for r in g.transitive_closure_condensed(df).collect()}
-    assert condensed == direct
-    assert ("s", "s") in condensed and ("a", "a") in condensed and ("d", "d") in condensed
 
 
 def test_level_stack_routed_property_random_sequences(spark):
