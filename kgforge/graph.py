@@ -380,7 +380,8 @@ def transitive_closure_seminaive(
     ``stats`` follows :func:`transitive_closure`'s contract; the final
     round's delta is the empty one."""
     spark = edges.sparkSession
-    base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=True)
+    # lazy: the count below is the checkpoint-materializing action
+    base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=False)
     parts = _fixpoint_partitions(spark, base.count() * 8)
     configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with _constraint_propagation_off(spark, parts, aqe_off=parts < configured):
@@ -393,14 +394,18 @@ def transitive_closure_seminaive(
                 .select(F.col("f.parent").alias("parent"), F.col("e.child").alias("child"))
                 .dropDuplicates()
             )
-            new = grown.join(closure, ["parent", "child"], "left_anti").localCheckpoint(eager=True)
-            if new.isEmpty():
+            # lazy: one count per round materializes the checkpoint and
+            # is both the termination test and the stats delta size
+            new = grown.join(closure, ["parent", "child"], "left_anti").localCheckpoint(
+                eager=False
+            )
+            n_new = new.count()
+            if stats is not None:
+                stats.setdefault("delta_sizes", []).append(n_new)
+            if n_new == 0:
                 if stats is not None:
                     stats["rounds"] = i + 1
-                    stats.setdefault("delta_sizes", []).append(0)
                 return closure
-            if stats is not None:
-                stats.setdefault("delta_sizes", []).append(new.count())
             # union of checkpointed deltas; flatten periodically to keep
             # the logical plan shallow
             closure = closure.unionByName(new)

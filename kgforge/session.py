@@ -95,45 +95,46 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     parallel no-op Arrow batch per task slot moves it to session
     creation, exactly like the executor warm-up a long-lived job does.
     Disable with KGFORGE_WARM_PYTHON=0 (e.g. for UDF-free one-shots).
+
+    A failure raises out of :func:`get_spark` with its traceback: a
+    worker pool that cannot run a UDF (say, cannot import ``kgforge``)
+    is broken, and the first real UDF job would fail the same way.
     """
     if os.environ.get("KGFORGE_WARM_PYTHON", "1") == "0":
         return
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED:
         return
-    _WARMED.add(app_id)
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import col, pandas_udf
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import col, pandas_udf
 
-        touch = pandas_udf(_touch_batch, "long")
-        spark.sparkContext.setJobDescription("session: warm python worker pool")
-        spark.range(cores * 2).repartition(cores * 2).select(touch(col("id"))).count()
-        # Second pass: string Arrow batches through a shuffle + hash
-        # aggregate. The long-column pool fork above leaves the string
-        # serialization path (Arrow var-length buffers both directions)
-        # and the shuffle/agg codegen cold, and the session's first real
-        # string-UDF job pays them — measured 1-2.5 s off the first
-        # dictionary scan at 32 cores. Synthetic range input only; the
-        # residual first-run cost (plan-specific codegen, per-call
-        # broadcasts) is not generically warmable and stays where it is.
-        touch_s = pandas_udf(_touch_str_batch, "long")
-        spark.sparkContext.setJobDescription("session: warm string udf path")
-        (
-            spark.range(cores * 2000)
-            .repartition(cores * 2)
-            .withColumn(
-                "s",
-                F.concat(F.lit("warm-"), col("id").cast("string"), F.lit("-x" * 40)),
-            )
-            .select(touch_s(col("s")).alias("n"))
-            .groupBy((col("n") % 7).alias("k"))
-            .count()
-            .count()
+    touch = pandas_udf(_touch_batch, "long")
+    spark.sparkContext.setJobDescription("session: warm python worker pool")
+    spark.range(cores * 2).repartition(cores * 2).select(touch(col("id"))).count()
+    # Second pass: string Arrow batches through a shuffle + hash
+    # aggregate. The long-column pool fork above leaves the string
+    # serialization path (Arrow var-length buffers both directions)
+    # and the shuffle/agg codegen cold, and the session's first real
+    # string-UDF job pays them — measured 1-2.5 s off the first
+    # dictionary scan at 32 cores. Synthetic range input only; the
+    # residual first-run cost (plan-specific codegen, per-call
+    # broadcasts) is not generically warmable and stays where it is.
+    touch_s = pandas_udf(_touch_str_batch, "long")
+    spark.sparkContext.setJobDescription("session: warm string udf path")
+    (
+        spark.range(cores * 2000)
+        .repartition(cores * 2)
+        .withColumn(
+            "s",
+            F.concat(F.lit("warm-"), col("id").cast("string"), F.lit("-x" * 40)),
         )
-        spark.sparkContext.setJobDescription(None)
-    except Exception:  # pragma: no cover — warming must never break startup
-        pass
+        .select(touch_s(col("s")).alias("n"))
+        .groupBy((col("n") % 7).alias("k"))
+        .count()
+        .count()
+    )
+    spark.sparkContext.setJobDescription(None)
+    _WARMED.add(app_id)
 
 
 def _touch_batch(v):
@@ -158,12 +159,15 @@ def spread_scan(df, *keys: str):
     this adds nothing; when it does fire, the hash repartition doubles
     as the exchange any downstream groupBy on the same key needs.
 
-    The partition probe builds the physical RDD but launches no job
-    (the plans this is applied to are scans/unions with no exchanges
-    below them).
+    A plan that already holds a shuffle exchange comes back unchanged
+    (it already fans out, and with AQE on, probing its partition count
+    would run its shuffle stages). For scan-only plans the partition
+    probe builds the physical RDD but launches no job.
     """
     from pyspark.sql import functions as F
 
+    if _has_shuffle_exchange(df):
+        return df
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
@@ -173,3 +177,28 @@ def spread_scan(df, *keys: str):
     if n * 2 <= target:
         return df.repartition(target, *[F.col(k) for k in keys])
     return df
+
+
+def _has_shuffle_exchange(df) -> bool:
+    """True when ``df``'s physical plan holds a shuffle exchange. Only
+    plans, runs no job. Catalyst hides three subtrees from
+    ``children``, so the walk opens them itself: an AQE plan's current
+    plan, a query stage's plan and a cache scan's cached plan."""
+    shuffle = df.sparkSession._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.exchange.ShuffleExchangeLike"
+    )
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if shuffle.isInstance(node):
+            return True
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif kind == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False

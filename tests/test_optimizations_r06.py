@@ -15,8 +15,10 @@ for performance keeps its exact pre-change semantics.
 - simhash batch kernel: bit-identical to the scalar reference on edge
   cases the corpus test cannot hit;
 - spread_scan: fires only when the scan is narrower than half the
-  session parallelism, and never changes rows;
-- string warm-up: the warmed session still runs string pandas UDFs.
+  session parallelism, never changes rows, and returns a plan that
+  already shuffles unchanged without starting a job;
+- warm-up: the warmed session still runs string pandas UDFs, and a
+  failing warm-up raises instead of being swallowed.
 
 The cosine rescore has one implementation (the interpreted
 ``aggregate`` fold in ``datapipe.similarity``); its values are pinned
@@ -278,7 +280,45 @@ def test_spread_scan_noop_on_wide_input_and_rows_stable(spark, sf_dir):
     )
 
 
+def test_spread_scan_returns_planned_exchange_unchanged_without_a_job(spark, sf_dir):
+    """A plan that already shuffles comes back as the same object, and
+    the guard only plans: with AQE on, probing the partition count of
+    such a plan would run its shuffle stages."""
+    grouped = _docs(spark, sf_dir).groupBy("doc_id").count()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert spread_scan(grouped, "doc_id") is grouped
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    # control: the tracker does see this plan's jobs once one runs
+    grouped.count()
+    assert set(tracker.getJobIdsForGroup(None)) > before
+
+
 # ------------------------------------------------------- session warm-up
+
+
+def test_warm_up_failure_propagates(monkeypatch):
+    """A worker pool that cannot run the warm-up job must fail session
+    start with its error, not look warm; the session is not marked
+    warmed, so a retry warms again."""
+    from kgforge import session
+
+    class _Context:
+        applicationId = "stub-app-warm-failure"
+
+        def setJobDescription(self, desc):
+            pass
+
+    class _Session:
+        sparkContext = _Context()
+
+        def range(self, *args):
+            raise RuntimeError("worker pool cannot start")
+
+    monkeypatch.delenv("KGFORGE_WARM_PYTHON", raising=False)
+    with pytest.raises(RuntimeError, match="worker pool cannot start"):
+        session._warm_python_workers(_Session(), 2)
+    assert _Context.applicationId not in session._WARMED
 
 
 def test_string_warm_batch_fn_and_warmed_session_run_string_udfs(spark):

@@ -439,6 +439,24 @@ def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):
     all_buckets = [b for s in snaps for b in s["buckets"]]
     assert sorted(all_buckets) == list(range(8))
     assert sum(s["n_triples"] for s in snaps) == expected
+    # layout: one exchange on the bucket id puts each bucket in a single
+    # partition, so every bucket directory holds exactly one file, also
+    # across the crash-then-resume sequence
+    data_dir = tmp_path / "kg" / "triples"
+    bucket_dirs = sorted(data_dir.glob("subj_bucket=*"))
+    for d in bucket_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+    # per-bucket manifest counts equal an independent count of the input
+    want = {
+        r["b"]: r["count"]
+        for r in triples.groupBy(F.pmod(F.xxhash64("subj"), F.lit(8)).alias("b"))
+        .count()
+        .collect()
+    }
+    assert {int(k): v["n_triples"] for k, v in manifest["committed"].items()} == {
+        b: want.get(b, 0) for b in range(8)
+    }
+    assert {int(d.name.split("=")[1]) for d in bucket_dirs} == set(want)
     triples.unpersist()
 
 
