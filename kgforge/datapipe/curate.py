@@ -37,7 +37,6 @@ def curate_corpus(
     max_tokens: int | None = None,
     dedup: str = "cluster",
     span_min_docs: int | None = None,
-    cc: str = "minlabel",
 ) -> tuple[DataFrame, list[dict]]:
     """Run the composed curation pipeline over ``documents``
     (doc_id, text, ...).
@@ -57,10 +56,6 @@ def curate_corpus(
 
     Returns ``(curated, funnel)`` where ``funnel`` is a list of
     ``{"stage", "n_in", "n_out"}`` dicts, one per applied stage.
-
-    ``cc`` routes the cluster-dedup components kernel
-    (:func:`kgforge.datapipe.dedup.dedup_clusters`): ``"minlabel"``
-    default, ``"star"`` for chained pair graphs.
 
     Scan discipline (measured — an uncached composition replayed its
     subtrees 3x at the 8x bench size):
@@ -139,7 +134,7 @@ def curate_corpus(
         # output cache is materialized
         stage_in = cur.cache()
         pairs = dd.lsh_candidate_pairs(stage_in)
-        clusters = dd.dedup_clusters(stage_in, pairs, cc=cc)
+        clusters = dd.dedup_clusters(stage_in, pairs)
         losers = clusters.filter(~F.col("keep")).select("doc_id")
         cur = gate("dedup_cluster", stage_in.join(losers, "doc_id", "left_anti"), n)
         n = funnel[-1]["n_out"]

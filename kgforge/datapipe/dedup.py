@@ -510,9 +510,7 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3, n_bands: int =
     ).select("doc_a", "doc_b", "hamming")
 
 
-def dedup_clusters(
-    documents: DataFrame, pairs: DataFrame, cc: str = "minlabel"
-) -> DataFrame:
+def dedup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Near-dup CLUSTERING: candidate pairs from any pair source (LSH
     bands, SimHash collisions, embedding buckets) are closed into
     connected components and each cluster elects one keeper.
@@ -521,27 +519,20 @@ def dedup_clusters(
     transitive pair-by-pair (A~B, B~C but A~C may miss every band), yet
     a training corpus wants ONE representative per duplicate *cluster*.
     Reuses the KG engine's distributed connected-components kernel
-    (kgforge.graph.connected_components — the same star-contraction
-    machinery behind canonical IRIs), then keeps, per component, the
-    longest text with doc_id as the tiebreak (the common quality
-    heuristic; swap the ordering column for a quality score from
-    text.quality_features).
+    (kgforge.graph.connected_components — the min-label propagation
+    that canonicalization runs over its star equivalence edges), then
+    keeps, per component, the longest text with doc_id as the tiebreak
+    (the common quality heuristic; swap the ordering column for a
+    quality score from text.quality_features). Dedup cluster graphs are
+    near-cliques from bucket collisions (diameter 2-3), so propagation
+    closes in a few rounds; measured flat across 1x→100x in
+    BENCH_cc_curve.json.
 
     Returns (doc_id, cluster_id, keep) for every document that belongs
     to some cluster; documents with no near-dup pair are implicitly
     their own keepers. At 100 TB every step is the CC fixpoint's
     bounded shuffles plus one window — no all-pairs stage is added on
     top of the (already bucketed) pair source.
-
-    ``cc`` picks the components kernel: ``"minlabel"`` (default — dedup
-    cluster graphs are near-cliques from bucket collisions, diameter
-    2-3, so rounds stay at 2; measured flat across 1x→100x in
-    BENCH_cc_curve.json) or ``"star"`` (large/small-star contraction,
-    O(log^2 n) rounds regardless of diameter — the escape hatch when
-    the pair source chains, e.g. threshold-free embedding buckets over
-    a drifting corpus; the same curve closes a 10,000-diameter chain in
-    15 rounds). Labels may differ between kernels (both elect the
-    component-min), clusters are identical (pytest-pinned).
     """
     from pyspark.sql import Window
 
@@ -551,13 +542,7 @@ def dedup_clusters(
         F.col(pairs.columns[0]).cast("string").alias("parent"),
         F.col(pairs.columns[1]).cast("string").alias("child"),
     )
-    if cc == "star":
-        kernel = graph.connected_components_star
-    elif cc == "minlabel":
-        kernel = graph.connected_components
-    else:  # pragma: no cover
-        raise ValueError(f"unknown cc kernel {cc!r}")
-    comps = kernel(edges).select(
+    comps = graph.connected_components(edges).select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster_id"),
     )

@@ -430,9 +430,11 @@ def khop_descendants(edges: DataFrame, roots: DataFrame, max_depth: int) -> Data
                 .select(F.col("f.root").alias("root"), F.col("e.child").alias("node"), F.lit(d).alias("depth"))
                 .dropDuplicates()
                 .join(out.select("root", "node"), ["root", "node"], "left_anti")
-                .localCheckpoint(eager=True)
+                # lazy: the count below materializes the checkpoint and
+                # is the termination test — one job per round
+                .localCheckpoint(eager=False)
             )
-            if frontier.isEmpty():
+            if frontier.count() == 0:
                 break
             out = out.unionByName(frontier)
     return out
@@ -461,9 +463,10 @@ def connected_components(
     (node, component).
 
     Each iteration: component[n] = min(component[n], min over neighbors)
-    — a shuffle groupBy on node. Converges in O(diameter)+1 iterations;
-    for extreme diameters :func:`connected_components_star` is the
-    drop-in upgrade (O(log^2 n) rounds).
+    — a shuffle groupBy on node. Converges in O(diameter)+1 iterations,
+    so rounds grow with the graph's diameter; a graph that has not
+    converged after ``max_iterations`` rounds raises
+    :class:`ClosureNotConverged` rather than returning partial labels.
 
     Per-round cost is kept minimal because at dedup-cluster shapes
     (tiny diameter, so 3-5 rounds) the fixed cost per round IS the
@@ -536,93 +539,6 @@ def connected_components(
     raise ClosureNotConverged(f"components not stable after {max_iterations} rounds")
 
 
-def connected_components_star(
-    edges: DataFrame, max_iterations: int = 64, stats: dict | None = None
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the diameter-robust upgrade over min-label propagation: label
-    propagation needs O(diameter) rounds, star contraction converges in
-    O(log^2 n) regardless of diameter (a million-node chain closes in
-    ~20 rounds, not a million). Returns (node, component), identical to
-    :func:`connected_components` (pytest-asserted on a long chain).
-
-    large-star: every node points its *larger* neighbors at the minimum
-    of its neighborhood (incl. itself); small-star does the same for
-    smaller-or-equal neighbors. Both are a groupBy + join per round —
-    pure shuffle ops, no driver data. Same loop hygiene as
-    :func:`connected_components`: sized shuffles, freed superseded
-    checkpoints, and stability read as |next| == |cur| plus one-sided
-    ``next \\ cur`` emptiness (equal multiset cardinality + multiset
-    containment <=> equality — half the old two-sided exceptAll cost).
-    """
-    spark = edges.sparkSession
-    with _constraint_propagation_off(spark):
-        cur = (
-            edges.select(F.col("parent").alias("u"), F.col("child").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-            # lazy: the sizing count below materializes it (fused job)
-            .localCheckpoint(eager=False)
-        )
-    n_cur = cur.count()
-    parts = _fixpoint_partitions(spark, n_cur)
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _constraint_propagation_off(spark, parts, aqe_off=parts < configured):
-
-        def _large_star(e: DataFrame) -> DataFrame:
-            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            m = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-            return (
-                sym.join(m, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .dropDuplicates()
-            )
-
-        def _small_star(e: DataFrame) -> DataFrame:
-            # orient every edge (big, small); group by the big end
-            oriented = e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            m = oriented.groupBy("u").agg(F.min("v").alias("m"))
-            nbrs = oriented.join(m, "u")
-            out = nbrs.select(F.col("v").alias("u"), F.col("m").alias("v")).unionByName(
-                nbrs.select("u", F.col("m").alias("v"))
-            )
-            return out.filter(F.col("u") != F.col("v")).dropDuplicates()
-
-        delta_sizes: list[int] = []
-        for i in range(max_iterations):
-            # lazy checkpoint + count fused into one job per round
-            nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-            n_nxt = nxt.count()
-            # multiset equality <=> equal cardinality + one-sided
-            # multiset containment (count is a cached-scan, exceptAll a
-            # join — this halves the old two-sided stability check)
-            stable = n_nxt == n_cur and nxt.exceptAll(cur).isEmpty()
-            delta_sizes.append(n_nxt)
-            _free_local_checkpoint(cur)
-            cur, n_cur = nxt, n_nxt
-            if stable:
-                if stats is not None:
-                    stats["rounds"] = i + 1
-                    stats["delta_sizes"] = delta_sizes
-                nodes = (
-                    edges.select(F.col("parent").alias("node"))
-                    .unionByName(edges.select(F.col("child").alias("node")))
-                    .dropDuplicates()
-                )
-                labels = cur.groupBy("u").agg(F.min("v").alias("component")).select(
-                    F.col("u").alias("node"), "component"
-                )
-                return nodes.join(labels, "node", "left").select(
-                    "node", F.coalesce("component", "node").alias("component")
-                )
-    raise ClosureNotConverged(f"star contraction not stable after {max_iterations} rounds")
-
-
 # ------------------------------------------------------------------ placeholders
 def missing_parts(entities: DataFrame, edges: DataFrame) -> DataFrame:
     """J4: edge endpoints with no entity row -> MissingPart placeholders
@@ -647,28 +563,6 @@ def supersedes(entities: DataFrame) -> DataFrame:
         a.join(b, "name")
         .filter(F.col("older") < F.col("newer"))
         .select("newer", "older")
-    )
-
-
-def supersedes_chain(entities: DataFrame) -> DataFrame:
-    """J5 bounded variant: the same-name supersession order as a CHAIN —
-    each number points only to the next larger number in its name group
-    (one ``lead()`` window, O(k) edges per k-member group).
-
-    The exact pairwise form above emits O(k^2) rows for a k-member name
-    group — a Zipfian-hot display name at corpus scale lands an O(k^2)
-    *output* on one reducer. The chain carries the identical information
-    (supersession is a total order per group, so the transitive closure
-    of the chain recovers the exact pair set — pytest-pinned); the exact
-    form stays the gate-entry oracle default. Same treatment as the
-    J7/J8 horizon-bounded variants (reference
-    snowmobile_neo4j_importer.py:250-264 is pairwise in Cypher)."""
-    w = Window.partitionBy("name").orderBy("number")
-    return (
-        entities.select("name", "number")
-        .withColumn("newer", F.lead("number").over(w))
-        .filter(F.col("newer").isNotNull())
-        .select("newer", F.col("number").alias("older"))
     )
 
 
@@ -713,88 +607,38 @@ def part_of_prefix(entities: DataFrame, edges: DataFrame, prefix_len: int = 3) -
     return pairs.join(linked_undirected, ["member", "assembly"], "left_anti")
 
 
-# Default lookback for the bounded (scale) variants of the pairwise
-# change relations: a later change relates only to predecessors within
-# this many days. The reference's all-pairs semantics (horizon=None) are
-# quadratic in group size — with low-cardinality keys (change_type) a
-# 100x corpus turns one hot key into a reducer-killing O(k²) group, so
-# at scale the bounded form is the one to deploy.
-DEFAULT_CHANGE_HORIZON_DAYS = 365
-
-
-def _ordered_change_pairs(
-    changes: DataFrame, key: str, horizon_days: int | None
-) -> DataFrame:
+def _ordered_change_pairs(changes: DataFrame, key: str) -> DataFrame:
     """All (later, earlier) pairs of changes sharing ``key`` with
-    ts_earlier < ts_later — optionally bounded to a time horizon.
-
-    horizon=None: the reference's exact all-pairs self-join (shuffle key
-    = ``key`` alone; pre-dedup intermediate is quadratic in group size).
-
-    horizon=k days: both sides are bucketed to floor(epoch_day / k) and
-    the join key becomes (key, bucket) — the earlier side is exploded to
-    its own and the NEXT bucket, so every pair within k days co-locates
-    (buckets differ by at most 1) while the shuffle key's cardinality
-    grows with the time span of the data. Group size is bounded by
-    changes-per-horizon-window instead of changes-per-key-ever, which is
-    what survives a 100x corpus.
-    """
+    ts_earlier < ts_later: the reference's exact all-pairs self-join.
+    The shuffle key is ``key`` alone, so the pre-dedup intermediate is
+    quadratic in the size of a key group."""
     a = changes.select(
         key, F.col("change_id").alias("earlier"), F.col("ts").alias("ts_a")
     )
     b = changes.select(
         key, F.col("change_id").alias("later"), F.col("ts").alias("ts_b")
     )
-    if horizon_days is None:
-        return (
-            a.join(b, key)
-            .filter(F.col("ts_a") < F.col("ts_b"))
-            .select("later", "earlier")
-            .dropDuplicates()
-        )
-    bk_a = F.floor(F.datediff(F.col("ts_a"), F.lit("1970-01-01")) / horizon_days)
-    bk_b = F.floor(F.datediff(F.col("ts_b"), F.lit("1970-01-01")) / horizon_days)
-    # earlier side lands in its own bucket AND the next one; the later
-    # side keeps a single bucket, so each qualifying pair joins exactly
-    # once (no post-join dedup needed for the explode itself).
-    a2 = a.withColumn("bk", F.explode(F.array(bk_a, bk_a + 1)))
-    b2 = b.withColumn("bk", bk_b)
     return (
-        a2.join(b2, [key, "bk"])
-        .filter(
-            (F.col("ts_a") < F.col("ts_b"))
-            & (F.datediff(F.col("ts_b"), F.col("ts_a")) <= horizon_days)
-        )
+        a.join(b, key)
+        .filter(F.col("ts_a") < F.col("ts_b"))
         .select("later", "earlier")
         .dropDuplicates()
     )
 
 
-def depends_on(changes: DataFrame, horizon_days: int | None = None) -> DataFrame:
+def depends_on(changes: DataFrame) -> DataFrame:
     """J7 (:289-305): for changes touching the same part, the later
-    depends on the earlier. ``horizon_days`` bounds the lookback (see
-    :func:`_ordered_change_pairs`); None reproduces the reference's
-    exact unbounded semantics — affected_number is high-cardinality, so
-    the exact form holds up longer than related_to's, but hot parts
-    (thousands of changes each) still warrant the bound at scale."""
-    return _ordered_change_pairs(changes, "affected_number", horizon_days)
+    depends on the earlier (exact all-pairs, see
+    :func:`_ordered_change_pairs`)."""
+    return _ordered_change_pairs(changes, "affected_number")
 
 
-def related_to(
-    changes: DataFrame,
-    depends: DataFrame,
-    horizon_days: int | None = None,
-) -> DataFrame:
+def related_to(changes: DataFrame, depends: DataFrame) -> DataFrame:
     """J8 (:307-326): same change type, date-ordered, minus DEPENDS_ON.
-
-    ``horizon_days=None`` is the reference's exact all-pairs semantics —
-    correct, and what the gate oracle checks, but change_type has a
-    handful of values, so every change of one type lands on one reducer
-    and the pre-dedup intermediate is O(k²) in group size. At scale pass
-    a horizon (e.g. ``DEFAULT_CHANGE_HORIZON_DAYS``): the shuffle key
-    becomes (change_type, time_bucket) and group size is bounded by the
-    change rate, not the corpus age."""
-    pairs = _ordered_change_pairs(changes, "change_type", horizon_days)
+    Exact all-pairs semantics, as the gate oracle checks; change_type
+    has a handful of values, so one type's changes meet on one
+    reducer."""
+    pairs = _ordered_change_pairs(changes, "change_type")
     return pairs.join(depends, ["later", "earlier"], "left_anti")
 
 

@@ -159,14 +159,15 @@ def spread_scan(df, *keys: str):
     this adds nothing; when it does fire, the hash repartition doubles
     as the exchange any downstream groupBy on the same key needs.
 
-    A plan that already holds a shuffle exchange comes back unchanged
-    (it already fans out, and with AQE on, probing its partition count
-    would run its shuffle stages). For scan-only plans the partition
-    probe builds the physical RDD but launches no job.
+    A plan that already holds an exchange comes back unchanged: a
+    shuffle exchange already fans out, and probing the partition count
+    would run its shuffle stages under AQE or execute a broadcast. For
+    scan-only plans the partition probe builds the physical RDD but
+    launches no job.
     """
     from pyspark.sql import functions as F
 
-    if _has_shuffle_exchange(df):
+    if _has_exchange(df):
         return df
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -179,18 +180,19 @@ def spread_scan(df, *keys: str):
     return df
 
 
-def _has_shuffle_exchange(df) -> bool:
-    """True when ``df``'s physical plan holds a shuffle exchange. Only
-    plans, runs no job. Catalyst hides three subtrees from
-    ``children``, so the walk opens them itself: an AQE plan's current
-    plan, a query stage's plan and a cache scan's cached plan."""
-    shuffle = df.sparkSession._jvm.java.lang.Class.forName(
-        "org.apache.spark.sql.execution.exchange.ShuffleExchangeLike"
+def _has_exchange(df) -> bool:
+    """True when ``df``'s physical plan holds a shuffle or broadcast
+    exchange (the common ``Exchange`` base class). Only plans, runs no
+    job. Catalyst hides three subtrees from ``children``, so the walk
+    opens them itself: an AQE plan's current plan, a query stage's plan
+    and a cache scan's cached plan."""
+    exchange = df.sparkSession._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.exchange.Exchange"
     )
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
-        if shuffle.isInstance(node):
+        if exchange.isInstance(node):
             return True
         kind = node.getClass().getSimpleName()
         if kind == "AdaptiveSparkPlanExec":

@@ -739,83 +739,3 @@ def read_api_pages(
             break
     return spark.createDataFrame(rows, schema), page
 
-
-def read_api_pages_distributed(
-    spark: SparkSession,
-    fetch,
-    entity_set: str,
-    schema,
-    page_size: int = 1000,
-    start_page: int = 0,
-    n_pages: int = 64,
-    params: dict | None = None,
-    partitions: int | None = None,
-):
-    """S9 at scale: the paged reader fanned out across EXECUTORS — a
-    page-range table (``spark.range``) mapped through ``mapInPandas``,
-    so a large pull is bounded by the API's aggregate throughput, not
-    by one driver process's memory (:func:`read_api_pages` accumulates
-    every page driver-side).
-
-    Each task fetches its disjoint slice of the ``[start_page,
-    start_page + n_pages)`` window with the same ``$skip``/``$top``
-    protocol (reference query_odata,
-    scripts/windchill_odata_temporal_import.py:47-76). ``fetch`` must be
-    picklable and read-only/idempotent — Spark may re-run a page's task
-    on retry or recompute, the same contract as any Spark source.
-
-    Returns ``(DataFrame, next_page)``. The frame carries a ``_page``
-    lineage column (which request produced each row — per-partition
-    lineage, and the test hook proving disjoint assignment). The
-    resumable cursor semantics match the sequential reader: the frame is
-    materialized (cached) to count rows per page ONCE, and ``next_page``
-    is the page after the last one that returned rows — equal to the
-    window end when every page was full, so a caller loops windows
-    (passing ``next_page`` back as ``start_page``) until a window comes
-    back short, checkpointing the cursor between pulls exactly like the
-    sequential reader's. The returned frame is FILTERED to
-    ``_page < next_page``: when a mid-window page came back short while
-    later pages still returned rows (appends racing the pull), rows past
-    the cursor are excluded so resuming at ``next_page`` never
-    re-ingests them. The frame is cached (that is what makes the
-    page-count pass and the caller's consumption read the same fetch) —
-    callers should ``.unpersist()`` it once consumed.
-    """
-    import pandas as pd  # noqa: PLC0415 — executor-side import partner
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    names = [f.name for f in schema.fields]
-    # fresh StructType: StructType.add mutates in place, and the
-    # caller's schema must stay page-free
-    out_schema = StructType(list(schema.fields) + [StructField("_page", LongType())])
-    n_parts = partitions or min(n_pages, spark.sparkContext.defaultParallelism)
-    pages = spark.range(start_page, start_page + n_pages, 1, n_parts)
-
-    def fetch_pages(batches):
-        for pdf in batches:
-            rows = []
-            for page in pdf["id"]:
-                page_params = dict(params or {})
-                page_params["$skip"] = int(page) * page_size
-                page_params["$top"] = page_size
-                for r in fetch(entity_set, page_params):
-                    rows.append([r.get(n) for n in names] + [int(page)])
-            yield pd.DataFrame(rows, columns=[*names, "_page"])
-
-    raw = pages.mapInPandas(fetch_pages, out_schema).cache()
-    per_page = {r["_page"]: r["n"] for r in raw.groupBy("_page").agg(F.count("*").alias("n")).collect()}
-    # cursor = page after the first non-full page (the page the
-    # sequential reader consumed last before stopping), or the window
-    # end when every page was full
-    full_through = start_page
-    for p in range(start_page, start_page + n_pages):
-        full_through = p + 1
-        if per_page.get(p, 0) < page_size:
-            break
-    # drop rows past the cursor (racing-append duplicates on resume),
-    # re-cache the consumable frame, and release the raw fetch cache
-    df = raw.filter(F.col("_page") < F.lit(full_through)).cache()
-    df.count()
-    raw.unpersist()
-    return df, full_through

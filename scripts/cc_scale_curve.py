@@ -16,11 +16,6 @@ corpus. Scale axes:
   The pass criterion is per-pair microseconds FALLING monotonically —
   the same amortization the closure curve recorded
   (BENCH_closure_curve.json).
-- depth: a synthetic 10,000-node chain. Min-label would need 10k rounds
-  (documented, not run); alternating large-star/small-star
-  (connected_components_star) closes it in O(log^2 n) rounds — recorded
-  here as the diameter-robustness arm, mirroring the closure curve's
-  doubling-vs-seminaive split.
 
 Usage: python scripts/cc_scale_curve.py [sf_dir] [out_json]
 Writes one JSON blob (per-shape: edges, nodes, components, rounds,
@@ -59,21 +54,11 @@ def replicate_pairs(pairs: DataFrame, copies: int) -> DataFrame:
     return reduce(DataFrame.unionByName, parts)
 
 
-def chain_edges(spark, n: int) -> DataFrame:
-    """A single n-node path: the worst case for O(diameter) label
-    propagation, the showcase for O(log^2 n) star contraction."""
-    return (
-        spark.range(n - 1)
-        .select(F.col("id").alias("parent"), (F.col("id") + 1).alias("child"))
-        .select(F.col("parent").cast("string"), F.col("child").cast("string"))
-    )
-
-
-def run(name: str, fn, edges: DataFrame) -> dict:
+def run(name: str, edges: DataFrame) -> dict:
     n_edges = edges.count()
     stats: dict = {}
     t0 = time.perf_counter()
-    comps = fn(edges, stats=stats)
+    comps = graph.connected_components(edges, stats=stats)
     agg = comps.agg(
         F.count("*").alias("nodes"), F.countDistinct("component").alias("components")
     ).first()
@@ -117,22 +102,9 @@ def main() -> None:
         ).localCheckpoint(eager=True)
 
     result = {"sf_dir": sf_dir, "cores": 8}
-    result["minlabel_1x"] = run("minlabel_1x", graph.connected_components, pairs)
-    result["minlabel_10x"] = run(
-        "minlabel_10x", graph.connected_components, as_edges(replicate_pairs(pairs_num, 10))
-    )
-    result["minlabel_100x"] = run(
-        "minlabel_100x", graph.connected_components, as_edges(replicate_pairs(pairs_num, 100))
-    )
-    result["star_1x"] = run("star_1x", graph.connected_components_star, pairs)
-    result["star_10x"] = run(
-        "star_10x", graph.connected_components_star, as_edges(replicate_pairs(pairs_num, 10))
-    )
-    # diameter arm: a 10k chain needs 10k min-label rounds (not run);
-    # star contraction closes it in O(log^2 n)
-    result["star_chain_10k"] = run(
-        "star_chain_10k", graph.connected_components_star, chain_edges(spark, 10_000)
-    )
+    result["minlabel_1x"] = run("minlabel_1x", pairs)
+    result["minlabel_10x"] = run("minlabel_10x", as_edges(replicate_pairs(pairs_num, 10)))
+    result["minlabel_100x"] = run("minlabel_100x", as_edges(replicate_pairs(pairs_num, 100)))
 
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1)

@@ -57,11 +57,6 @@ def main() -> None:
         "N-Triples render (whole-stage codegen, no Python)": materialize.ntriples_lines(
             materialize.part_triples(e)
         ),
-        "Bounded RELATED_TO (shuffle key = change_type + time bucket)": graph.related_to(
-            fixtures.load_changes(spark, sf_dir),
-            graph.depends_on(fixtures.load_changes(spark, sf_dir)),
-            horizon_days=365,
-        ),
         "Star equivalence edges (one groupBy, no same-name self-join)": (
             canonicalize.equivalence_edges(e)
         ),

@@ -253,20 +253,6 @@ def test_dedup_clusters_close_pairs_transitively(spark, sf_dir):
     # every 3-chain merged into ONE cluster of size 3
     assert all(len(m) == 3 for m in got_clusters.values())
 
-    # the star-contraction kernel (the O(log^2 n) escape hatch for
-    # chained pair graphs) yields the SAME clusters and keepers
-    star = dd.dedup_clusters(corpus, pairs, cc="star").collect()
-    star_clusters: dict[int, list[int]] = {}
-    star_keepers: dict[int, int] = {}
-    for r in star:
-        star_clusters.setdefault(r["cluster_id"], []).append(r["doc_id"])
-        if r["keep"]:
-            star_keepers[r["cluster_id"]] = r["doc_id"]
-    assert sorted(map(sorted, star_clusters.values())) == sorted(
-        map(sorted, got_clusters.values())
-    )
-    assert set(star_keepers.values()) == set(keepers.values())
-
 
 def test_resize_images_nearest_neighbor_roundtrip(spark, sf_dir):
     """The multimodal resize op: every image row comes back as a REAL

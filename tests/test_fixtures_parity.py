@@ -248,62 +248,6 @@ def test_read_api_pages_paginates_and_resumes(spark, sf_dir):
     assert df2.count() == len(records) - 128
 
 
-def test_read_api_pages_distributed_matches_sequential(spark, sf_dir):
-    """Executor-side paged ingestion: the page-range mapInPandas reader
-    must (a) assign every page to exactly one task partition with the
-    partitions fetching DISJOINT page sets, (b) produce exactly the
-    sequential reader's row set, and (c) return the same resumable
-    cursor."""
-    from pyspark.sql import functions as F
-
-    from kgforge import sources
-    from kgforge.schema import ENTITY_SCHEMA
-
-    ents = fixtures.load_entities(spark, sf_dir).orderBy("number").collect()
-    records = [r.asDict() for r in ents]
-
-    def fake_fetch(entity_set, params):
-        assert entity_set == "Parts"
-        return records[params["$skip"]: params["$skip"] + params["$top"]]
-
-    seq_df, seq_cursor = sources.read_api_pages(
-        spark, fake_fetch, "Parts", ENTITY_SCHEMA, page_size=64
-    )
-    dist_df, dist_cursor = sources.read_api_pages_distributed(
-        spark,
-        fake_fetch,
-        "Parts",
-        ENTITY_SCHEMA,
-        page_size=64,
-        n_pages=seq_cursor + 5,  # window overshoots past the short page
-        partitions=4,
-    )
-    assert dist_cursor == seq_cursor
-
-    # N partitions fetch disjoint pages, and their union is every page
-    assignment = (
-        dist_df.select(F.spark_partition_id().alias("pid"), "_page")
-        .dropDuplicates()
-        .collect()
-    )
-    by_pid: dict[int, set] = {}
-    for r in assignment:
-        by_pid.setdefault(r["pid"], set()).add(r["_page"])
-    # >1 partition carried rows (fan-out happened; window partitions
-    # holding only past-the-end pages legitimately produce none)
-    assert len(by_pid) > 1
-    all_pages = set()
-    for pages in by_pid.values():
-        assert not (pages & all_pages)  # disjoint
-        all_pages |= pages
-    assert all_pages == set(range(seq_cursor))
-
-    got = sorted(map(tuple, dist_df.drop("_page").collect()))
-    want = sorted(map(tuple, seq_df.collect()))
-    assert got == want and got
-    dist_df.unpersist()
-
-
 def test_read_bom_csv_by_name_resolution_semantics(spark, sf_dir, tmp_path):
     """Name-based BOM CSV flow: the distributed name resolution must
     reproduce the reference semantics — unique name resolves, ambiguous

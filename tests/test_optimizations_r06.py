@@ -16,7 +16,8 @@ for performance keeps its exact pre-change semantics.
   cases the corpus test cannot hit;
 - spread_scan: fires only when the scan is narrower than half the
   session parallelism, never changes rows, and returns a plan that
-  already shuffles unchanged without starting a job;
+  already holds a shuffle or broadcast exchange unchanged without
+  starting a job;
 - warm-up: the warmed session still runs string pandas UDFs, and a
   failing warm-up raises instead of being swallowed.
 
@@ -281,17 +282,22 @@ def test_spread_scan_noop_on_wide_input_and_rows_stable(spark, sf_dir):
 
 
 def test_spread_scan_returns_planned_exchange_unchanged_without_a_job(spark, sf_dir):
-    """A plan that already shuffles comes back as the same object, and
-    the guard only plans: with AQE on, probing the partition count of
-    such a plan would run its shuffle stages."""
-    grouped = _docs(spark, sf_dir).groupBy("doc_id").count()
+    """A plan that already holds an exchange comes back as the same
+    object, and the guard only plans: probing the partition count of
+    such a plan would run its shuffle stages under AQE (the grouped
+    input) or execute its broadcast (the broadcast-join input)."""
+    inputs = {
+        "grouped": (_docs(spark, sf_dir).groupBy("doc_id").count(), "doc_id"),
+        "broadcast_join": (spark.range(100).join(F.broadcast(spark.range(5)), "id"), "id"),
+    }
     tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    assert spread_scan(grouped, "doc_id") is grouped
-    assert set(tracker.getJobIdsForGroup(None)) == before
-    # control: the tracker does see this plan's jobs once one runs
-    grouped.count()
-    assert set(tracker.getJobIdsForGroup(None)) > before
+    for name, (df, key) in inputs.items():
+        before = set(tracker.getJobIdsForGroup(None))
+        assert spread_scan(df, key) is df, name
+        assert set(tracker.getJobIdsForGroup(None)) == before, name
+        # control: the tracker does see this plan's jobs once one runs
+        df.count()
+        assert set(tracker.getJobIdsForGroup(None)) > before, name
 
 
 # ------------------------------------------------------- session warm-up

@@ -240,80 +240,6 @@ def test_bom_edges_direct_matches_mention_path(spark, sf_dir):
     assert direct == classic and classic
 
 
-def test_bounded_change_relations_match_exact(spark, sf_dir):
-    """Time-bucketed related_to/depends_on (the scale path): with a
-    horizon covering the fixture's whole time span the bounded form
-    must equal the reference-exact all-pairs form; with a short horizon
-    it must equal the exact form filtered to pairs within the horizon."""
-    changes = fixtures.load_changes(spark, sf_dir)
-    dep_exact = graph.depends_on(changes)
-    exact = {(r.later, r.earlier) for r in graph.related_to(changes, dep_exact).collect()}
-
-    span_days = changes.agg(
-        F.datediff(F.max("ts"), F.min("ts")).alias("d")
-    ).collect()[0]["d"] + 1
-    wide = {
-        (r.later, r.earlier)
-        for r in graph.related_to(changes, dep_exact, horizon_days=span_days).collect()
-    }
-    assert wide == exact and exact
-
-    horizon = max(span_days // 4, 1)
-    ts = {r.change_id: r.ts for r in changes.collect()}
-    want_near = {
-        (l, e) for (l, e) in exact if (ts[l].date() - ts[e].date()).days <= horizon
-    }
-    got_near = {
-        (r.later, r.earlier)
-        for r in graph.related_to(changes, dep_exact, horizon_days=horizon).collect()
-    }
-    assert got_near == want_near
-    assert len(got_near) < len(exact)  # the bound actually bit
-
-    dep_wide = {
-        (r.later, r.earlier)
-        for r in graph.depends_on(changes, horizon_days=span_days).collect()
-    }
-    assert dep_wide == {(r.later, r.earlier) for r in dep_exact.collect()}
-
-
-def test_supersedes_chain_closure_matches_exact(spark, sf_dir):
-    """Bounded J5 (the scale path): the lead()-chain emits O(k) edges
-    per same-name group whose transitive closure must recover the exact
-    pairwise supersedes set; the exact form stays the gate oracle."""
-    entities = fixtures.load_entities(spark, sf_dir)
-    exact = {(r.newer, r.older) for r in graph.supersedes(entities).collect()}
-    chain_df = graph.supersedes_chain(entities)
-    chain = {(r.newer, r.older) for r in chain_df.collect()}
-    assert chain <= exact and chain  # chain is a subset ...
-    closed = graph.transitive_closure(
-        chain_df.select(F.col("newer").alias("parent"), F.col("older").alias("child"))
-    )
-    got = {(r.parent, r.child) for r in closed.collect()}
-    assert got == exact  # ... whose closure is the whole pair set
-    # the bound actually bit: chain edges are linear in group size
-    k_sizes = (
-        entities.groupBy("name").count().filter(F.col("count") > 1).collect()
-    )
-    assert len(chain) == sum(r["count"] - 1 for r in k_sizes)
-    assert len(exact) == sum(r["count"] * (r["count"] - 1) // 2 for r in k_sizes)
-
-
-def test_bounded_related_to_shuffles_on_time_bucket(spark, sf_dir):
-    """Plan shape of the scale path: the bounded self-join's shuffle key
-    must include the time bucket alongside change_type, so one hot
-    change_type can no longer collapse onto a single reducer."""
-    changes = fixtures.load_changes(spark, sf_dir)
-    bounded = graph.related_to(
-        changes, graph.depends_on(changes), horizon_days=30
-    )
-    plan = bounded._jdf.queryExecution().executedPlan().toString()
-    join_chunks = [
-        c for c in plan.split("Join")[1:] if "change_type" in c[:400] and "bk" in c[:400]
-    ]
-    assert join_chunks, f"no (change_type, bk)-keyed join in plan:\n{plan[:2000]}"
-
-
 def test_equivalence_edges_star_is_linear_in_group_size(spark):
     """Hot-name groups: k entities sharing one display name must yield
     k-1 star edges (member -> group-min), not the O(k²) clique, and the
@@ -333,20 +259,48 @@ def test_equivalence_edges_star_is_linear_in_group_size(spark):
     assert all(got[f"{i}"] == f"{i}" for i in range(5))  # singletons self-represent
 
 
-def test_cc_star_matches_label_propagation_on_long_chain(spark):
-    """large-star/small-star must agree with min-label propagation on a
-    200-node chain — the diameter case star contraction exists for
-    (label propagation needs O(diameter) rounds; star contraction
-    O(log^2 n))."""
+def test_cc_label_propagation_on_long_chain(spark):
+    """Min-label propagation over a 200-node chain (diameter 199, so
+    about 200 rounds) labels every chain node with the chain's minimum
+    and leaves a second component apart."""
     chain = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(199)]
         + [("z1", "z2"), ("z2", "z3")],  # second small component
         "parent string, child string",
     )
-    star = {r.node: r.component for r in graph.connected_components_star(chain).collect()}
-    prop = {r.node: r.component for r in graph.connected_components(chain, max_iterations=256).collect()}
-    assert star == prop
-    assert star["n0150"] == "n0000" and star["z3"] == "z1"
+    got = {r.node: r.component for r in graph.connected_components(chain, max_iterations=256).collect()}
+    want = {f"n{i:04d}": "n0000" for i in range(200)} | {"z1": "z1", "z2": "z1", "z3": "z1"}
+    assert got == want
+
+
+def test_khop_descendants_matches_bfs_with_one_job_per_round(spark):
+    """Bounded BFS on a 5-node chain equals a Python BFS, and each round
+    runs one Spark job: the lazy checkpoint is materialized by the
+    round's termination count."""
+    nodes = [f"c{i}" for i in range(5)]
+    edges = spark.createDataFrame(list(zip(nodes, nodes[1:])), "parent string, child string")
+    children = dict(zip(nodes, nodes[1:]))
+
+    def bfs(roots, max_depth):
+        out = set()
+        for root in roots:
+            seen, frontier = {root}, [root]
+            out.add((root, root, 0))
+            for d in range(1, max_depth + 1):
+                frontier = [children[n] for n in frontier if n in children and children[n] not in seen]
+                seen.update(frontier)
+                out.update((root, n, d) for n in frontier)
+        return out
+
+    tracker = spark.sparkContext.statusTracker()
+    # (roots, max_depth, rounds run): depth 3 never empties the
+    # frontier; depth 6 from c0 stops after the empty fifth round
+    for roots, max_depth, rounds in ((["c0", "c3"], 3, 3), (["c0"], 6, 5)):
+        root_df = spark.createDataFrame([(r,) for r in roots], "number string")
+        before = set(tracker.getJobIdsForGroup(None))
+        got = graph.khop_descendants(edges, root_df, max_depth=max_depth)
+        assert len(set(tracker.getJobIdsForGroup(None)) - before) == rounds
+        assert {(r.root, r.node, r.depth) for r in got.collect()} == bfs(roots, max_depth)
 
 
 def _random_digraph(seed: int, n: int, m: int) -> list[tuple[str, str]]:
