@@ -57,14 +57,18 @@ def _constraint_propagation_off(
         keys["spark.sql.adaptive.enabled"] = "false"
     if shuffle_partitions is not None:
         keys["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    prev = {k: spark.conf.get(k, "true") for k in keys}
+    # None = the caller never set it: restore by unset, not by a default
+    prev = {k: spark.conf.getAll.get(k) for k in keys}
     for k, v in keys.items():
         spark.conf.set(k, v)
     try:
         yield
     finally:
         for k, v in prev.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # ------------------------------------------------------------------ edges

@@ -1,22 +1,16 @@
 """Scalar normalization & validation (SURVEY.md §2.2, P1-P15).
 
-Everything here is a *column expression* (JVM-side, whole-stage codegen)
-except the two byte-exactness-critical functions: float-repr part-number
-normalization has a pure-Python twin for the test oracle, and IRI
-percent-encoding also exists as a vectorized pandas UDF, both for exact
-parity with the reference's Python behavior
-(/root/reference/src/utils/spreadsheet_loader.py:35-42, :881).
+Everything here is a *column expression* (JVM-side, whole-stage codegen).
+Float-repr part-number normalization also has a pure-Python twin for the
+test oracle, for exact parity with the reference's Python behavior
+(/root/reference/src/utils/spreadsheet_loader.py:35-42); IRI
+percent-encoding reproduces ``urllib.parse.quote`` (:881) exactly.
 """
 
 from __future__ import annotations
 
-import urllib.parse
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 # ---------------------------------------------------------------- P1
@@ -49,18 +43,22 @@ def normalize_number_col(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------- P11
-@pandas_udf(StringType())
-def iri_encode_udf(s: pd.Series) -> pd.Series:
+def iri_encode_col(col: Column | str) -> Column:
     """Percent-encode ids into IRIs exactly like the reference
-    (``urllib.parse.quote`` with default safe='/', spreadsheet_loader.py:881)."""
-    return s.map(lambda v: urllib.parse.quote(v) if v is not None else None)
+    (``urllib.parse.quote`` with default safe='/', spreadsheet_loader.py:881).
+
+    ``url_encode`` is Java's form encoding of the UTF-8 bytes: it leaves
+    ``A-Za-z0-9.-*_`` alone, writes space as ``+`` and escapes the rest
+    as ``%XX``. ``quote`` differs in four characters only: it escapes
+    space and ``*`` and keeps ``~`` and ``/``."""
+    c = F.url_encode(col)
+    for src, dst in (("+", "%20"), ("*", "%2A"), ("%7E", "~"), ("%2F", "/")):
+        c = F.replace(c, F.lit(src), F.lit(dst))
+    return c
 
 
-def iri_encode_col(col: Column) -> Column:
-    """Column-expression percent-encoding for the restricted charset our
-    ids/names use ([A-Za-z0-9 #_.~/-]). Matches ``urllib.parse.quote``
-    on that charset; the pandas UDF above is the general/exact path."""
-    return F.replace(F.replace(col, F.lit(" "), F.lit("%20")), F.lit("#"), F.lit("%23"))
+# the frozen gate's name for the same encoder
+iri_encode_udf = iri_encode_col
 
 
 # ---------------------------------------------------------------- P6-P7

@@ -3,8 +3,10 @@
 read transcripts -> window-order -> extract mentions -> link against
 the canonical dictionary (broadcast or salted) -> assemble edges ->
 derive reverse + transitive-closure edges -> union triple families ->
-materialize subject-hash-bucketed triple table + N-Triples parity
-output + statistics, with per-partition manifest commits (resume.py).
+materialize subject-hash-bucketed triple table + statistics, with
+per-partition manifest commits (resume.py), in the one tail both entry
+points share (:func:`_materialize`); N-Triples parity output only under
+``--excel``.
 
 Run as ``spark-submit --master <cluster> --py-files kgforge.zip
 driver.py <in> <out>`` where driver.py calls :func:`run_pipeline`
@@ -30,6 +32,39 @@ class GraphBuild:
     edges: DataFrame
     closure: DataFrame
     triples: DataFrame
+
+
+def _union_families(entities, edges, closure, alt, desc, *extra: DataFrame) -> DataFrame:
+    """The triple families both entry points emit, plus ``extra``."""
+    return materialize.union_triples(
+        materialize.part_triples(entities),
+        materialize.bom_triples(edges),
+        materialize.used_in_triples(edges),
+        materialize.part_of_assembly_triples(closure),
+        materialize.alternate_triples(alt),
+        materialize.describe_triples(desc),
+        materialize.document_triples(desc),
+        *extra,
+    )
+
+
+def _materialize(
+    triples: DataFrame, out_dir: str | None, lineage: str, ntriples: bool = False
+) -> dict:
+    """Bucket ``triples`` by subject (one exchange) and cache it once;
+    the statistics (returned: total and per-predicate counts), the
+    resumable write and the optional N-Triples files all read that cache."""
+    bucketed = resume.bucket_by_subject(triples).cache()
+    try:
+        # the one job that scans the union and fills the cache
+        counts = {r["pred"]: r["n"] for r in materialize.triple_counts(bucketed).collect()}
+        if out_dir:
+            resume.write_triples_resumable(bucketed, out_dir, lineage=lineage)
+            if ntriples:
+                materialize.write_ntriples(bucketed, f"{out_dir}/ntriples")
+    finally:
+        bucketed.unpersist()
+    return {"total_triples": int(sum(counts.values())), "per_predicate": counts}
 
 
 def build_graph(
@@ -83,16 +118,9 @@ def build_graph(
     # representative; emitted as canonicalEquivalent edges so raw IRIs
     # stay queryable (reference keys triples by raw number).
     canon = canonicalize.assign_canonical_iris(entities)
-    canon_triples = materialize.canonical_equivalence_triples(canon)
-    triples = materialize.union_triples(
-        materialize.part_triples(entities),
-        materialize.bom_triples(edges),
-        materialize.used_in_triples(edges),
-        materialize.part_of_assembly_triples(closure),
-        materialize.alternate_triples(alt),
-        materialize.describe_triples(desc),
-        materialize.document_triples(desc),
-        canon_triples,
+    triples = _union_families(
+        entities, edges, closure, alt, desc,
+        materialize.canonical_equivalence_triples(canon),
     )
     return GraphBuild(transcripts, entities, linked, edges, closure, triples)
 
@@ -103,8 +131,6 @@ def run_pipeline(
     out_dir: str | None = None,
     strategy: str = "broadcast",
     closure_edge_mod: int | None = None,
-    write_ntriples: bool = False,
-    fail_after_commits: int | None = None,
     strict: bool = False,
     extra_edges: DataFrame | None = None,
 ) -> dict:
@@ -118,24 +144,10 @@ def run_pipeline(
         closure_edge_mod=closure_edge_mod,
         extra_edges=extra_edges,
     )
-    triples = build.triples.cache()
-    counts = {r["pred"]: r["n"] for r in materialize.triple_counts(triples).collect()}
-    total = int(sum(counts.values()))
-    if out_dir:
-        resume.write_triples_resumable(
-            triples,
-            out_dir,
-            lineage=f"sf_dir={sf_dir};strategy={strategy}",
-            fail_after_commits=fail_after_commits,
-        )
-        if write_ntriples:
-            materialize.write_ntriples(triples, f"{out_dir}/ntriples")
     stats = {
-        "total_triples": total,
-        "per_predicate": counts,
+        **_materialize(build.triples, out_dir, lineage=f"sf_dir={sf_dir};strategy={strategy}"),
         "n_edges": build.edges.count(),
     }
-    triples.unpersist()
     build.edges.unpersist()
     return stats
 
@@ -173,36 +185,19 @@ def import_workbook(
     closure = graph.transitive_closure(edges)
     alt = sources.read_excel_alternates(spark, excel_path)
     desc = sources.read_excel_describe_links(spark, excel_path)
-    triples = (
-        materialize.union_triples(
-            materialize.part_triples(entities),
-            materialize.bom_triples(edges),
-            materialize.used_in_triples(edges),
-            materialize.part_of_assembly_triples(closure),
-            materialize.alternate_triples(alt),
-            materialize.describe_triples(desc),
-            materialize.document_triples(desc),
-        )
-        .dropDuplicates(["subj", "pred", "obj"])
-        .cache()
+    triples = _union_families(entities, edges, closure, alt, desc)
+    tail = _materialize(
+        triples.dropDuplicates(["subj", "pred", "obj"]),
+        out_dir,
+        lineage=f"excel={excel_path};bom_csv={bom_csv}",
+        ntriples=True,
     )
-    counts = {r["pred"]: r["n"] for r in materialize.triple_counts(triples).collect()}
-    if out_dir:
-        # same resumable manifest-committed triple table as the fixture
-        # pipeline (subject-hash buckets, per-group commit, idempotent
-        # re-run), plus the N-Triples parity artifact
-        resume.write_triples_resumable(
-            triples, out_dir, lineage=f"excel={excel_path};bom_csv={bom_csv}"
-        )
-        materialize.write_ntriples(triples, f"{out_dir}/ntriples")
     stats = {
         "excel": excel_path,
         "n_parts": entities.count(),
         "n_edges": edges.count(),
-        "total_triples": int(sum(counts.values())),
-        "per_predicate": counts,
+        **tail,
     }
-    triples.unpersist()
     edges.unpersist()
     entities.unpersist()
     return stats

@@ -10,12 +10,13 @@ partial files instead of duplicating them), and the manifest — bucket
 ids, row counts, lineage — is committed atomically (tmp + rename) after
 each group. Resume = anti-set of bucket ids vs the manifest.
 
-Layout: the triple frame goes through ONE exchange on the bucket id
-(``repartition(n_buckets, "subj_bucket")``) and is cached, so every
-bucket's rows sit in a single partition and each
-``triples/subj_bucket=<b>/`` directory gets exactly one parquet file.
-The manifest row counts of every bucket come from one aggregate over
-that cached frame, taken before the first group is written.
+Layout: :func:`bucket_by_subject` runs ONE exchange on the bucket id
+(``repartition(n_buckets, "subj_bucket")``), so every bucket's rows sit
+in a single partition and each ``triples/subj_bucket=<b>/`` directory
+gets exactly one parquet file. The caller caches that frame and owns
+its lifetime (``pipeline._materialize``); the manifest row counts of
+every bucket come from one ``n_buckets``-task aggregate over it, taken
+before the first group is written.
 
 On a cluster this manifest lives in Iceberg snapshot summary properties
 and the write is `MERGE INTO`/replace-partition; the protocol is the
@@ -56,6 +57,16 @@ def _commit_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
+def bucket_by_subject(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """Add ``subj_bucket = pmod(xxhash64(subj), n_buckets)`` and put
+    each bucket in its own partition, so the one task that writes it
+    emits one file. Write parallelism is therefore ``n_buckets``: at
+    cluster scale the usual bucketed-table trade-off, set by that knob."""
+    return triples.withColumn(
+        "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
+    ).repartition(n_buckets, "subj_bucket")
+
+
 class InjectedFailure(RuntimeError):
     """Raised by the fault-injection hook in the kill-and-rerun test."""
 
@@ -71,85 +82,71 @@ def write_triples_resumable(
     """Write the triple table partitioned by subject-hash bucket, with
     incremental manifest commits; resumes past already-committed buckets.
 
+    ``triples`` is the (cached) :func:`bucket_by_subject` output for
+    the same ``n_buckets``; every commit group re-reads it.
+
     Returns the final manifest. ``fail_after_commits`` injects a crash
     after N successful commit groups (test hook).
-
-    Write parallelism equals ``n_buckets``: each bucket is written by
-    the one task that holds its partition, which is what gives one file
-    per bucket. At cluster scale that is the usual bucketed-table
-    trade-off, and ``n_buckets`` is the knob that sets it.
     """
+    if "subj_bucket" not in triples.columns:
+        raise ValueError("write_triples_resumable needs a frame from bucket_by_subject")
     manifest = read_manifest(out_dir)
     committed = set(int(k) for k in manifest["committed"])
     todo = [b for b in range(n_buckets) if b not in committed]
     if not todo:
         return manifest
 
-    # one exchange on the bucket id: every bucket lives in exactly one
-    # cached partition, so each group's write emits one file per bucket
-    bucketed = (
-        triples.withColumn(
-            "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-        )
-        .repartition(n_buckets, "subj_bucket")
-        .cache()
-    )
     data_dir = os.path.join(out_dir, "triples")
-    try:
-        # every bucket's manifest count from one aggregate; this job also
-        # materializes the cache the group writes below read
-        bucket_counts = {
-            r["subj_bucket"]: r["n"]
-            for r in bucketed.groupBy("subj_bucket").agg(F.count("*").alias("n")).collect()
-        }
-        commits_done = 0
-        for i in range(0, len(todo), commit_every):
-            group = todo[i : i + commit_every]
-            # dynamic overwrite replaces exactly the partitions in `group`
-            # -> idempotent under re-run of an uncommitted group.
-            (
-                bucketed.filter(F.col("subj_bucket").isin(group))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("subj_bucket")
-                .parquet(data_dir)
-            )
-            # empty buckets stay out of `counts` (they have no rows to
-            # group), so the snapshot hash payload keeps its shape
-            counts = {str(b): bucket_counts[b] for b in group if b in bucket_counts}
-            now = datetime.now(timezone.utc).isoformat()
-            for b in group:
-                manifest["committed"][str(b)] = {
-                    "n_triples": counts.get(str(b), 0),
-                    "lineage": lineage,
-                    "committed_at": now,
-                }
-            # Iceberg-style snapshot log: every commit group appends one
-            # snapshot whose id is a content hash chaining the parent —
-            # the linear history a table's snapshot metadata carries, so
-            # a resume's provenance (which run committed which buckets)
-            # is auditable after the fact.
-            snapshots = manifest.setdefault("snapshots", [])
-            parent_id = snapshots[-1]["snapshot_id"] if snapshots else None
-            payload = json.dumps(
-                [parent_id, group, counts, lineage], sort_keys=True
-            ).encode()
-            snapshots.append(
-                {
-                    "snapshot_id": hashlib.sha256(payload).hexdigest()[:16],
-                    "parent_snapshot_id": parent_id,
-                    "buckets": group,
-                    "n_triples": int(sum(counts.get(str(b), 0) for b in group)),
-                    "lineage": lineage,
-                    "committed_at": now,
-                }
-            )
-            _commit_manifest(out_dir, manifest)
-            commits_done += 1
-            if fail_after_commits is not None and commits_done >= fail_after_commits:
-                raise InjectedFailure(f"injected failure after {commits_done} commits")
-    finally:
-        bucketed.unpersist()
+    # every bucket's manifest count from one aggregate over the cached,
+    # bucket-partitioned frame (n_buckets tasks, no re-scan of the union)
+    bucket_counts = {
+        r["subj_bucket"]: r["n"]
+        for r in triples.groupBy("subj_bucket").agg(F.count("*").alias("n")).collect()
+    }
+    for n_done, i in enumerate(range(0, len(todo), commit_every), start=1):
+        group = todo[i : i + commit_every]
+        # dynamic overwrite replaces exactly the partitions in `group`
+        # -> idempotent under re-run of an uncommitted group.
+        (
+            triples.filter(F.col("subj_bucket").isin(group))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("subj_bucket")
+            .parquet(data_dir)
+        )
+        # empty buckets stay out of `counts` (they have no rows to
+        # group), so the snapshot hash payload keeps its shape
+        counts = {str(b): bucket_counts[b] for b in group if b in bucket_counts}
+        now = datetime.now(timezone.utc).isoformat()
+        for b in group:
+            manifest["committed"][str(b)] = {
+                "n_triples": counts.get(str(b), 0),
+                "lineage": lineage,
+                "committed_at": now,
+            }
+        # Iceberg-style snapshot log: every commit group appends one
+        # snapshot whose id is a content hash chaining the parent —
+        # the linear history a table's snapshot metadata carries, so
+        # a resume's provenance (which run committed which buckets)
+        # is auditable after the fact.
+        snapshots = manifest.setdefault("snapshots", [])
+        parent_id = snapshots[-1]["snapshot_id"] if snapshots else None
+        payload = json.dumps(
+            [parent_id, group, counts, lineage], sort_keys=True
+        ).encode()
+        snapshots.append(
+            {
+                "snapshot_id": hashlib.sha256(payload).hexdigest()[:16],
+                "parent_snapshot_id": parent_id,
+                "buckets": group,
+                "n_triples": int(sum(counts.get(str(b), 0) for b in group)),
+                "lineage": lineage,
+                "committed_at": now,
+            }
+        )
+        _commit_manifest(out_dir, manifest)
+        if fail_after_commits is not None and n_done >= fail_after_commits:
+            raise InjectedFailure(f"injected failure after {n_done} commits")
     return manifest
 
 

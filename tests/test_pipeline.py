@@ -369,12 +369,15 @@ def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):
     triples = materialize.part_triples(fixtures.load_entities(spark, sf_dir)).cache()
     expected = triples.count()
     out = str(tmp_path / "kg")
+    with pytest.raises(ValueError, match="bucket_by_subject"):
+        resume.write_triples_resumable(triples, out, n_buckets=8)
+    bucketed = resume.bucket_by_subject(triples, 8).cache()
     with pytest.raises(resume.InjectedFailure):
-        resume.write_triples_resumable(triples, out, n_buckets=8, commit_every=2, fail_after_commits=1)
+        resume.write_triples_resumable(bucketed, out, n_buckets=8, commit_every=2, fail_after_commits=1)
     manifest = resume.read_manifest(out)
     assert 0 < len(manifest["committed"]) < 8
     # resume
-    resume.write_triples_resumable(triples, out, n_buckets=8, commit_every=2)
+    resume.write_triples_resumable(bucketed, out, n_buckets=8, commit_every=2)
     manifest = resume.read_manifest(out)
     assert len(manifest["committed"]) == 8
     got = resume.read_triples(spark, out)
@@ -411,7 +414,43 @@ def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):
         b: want.get(b, 0) for b in range(8)
     }
     assert {int(d.name.split("=")[1]) for d in bucket_dirs} == set(want)
+    bucketed.unpersist()
     triples.unpersist()
+
+
+def test_fixpoint_loops_restore_unset_session_conf(spark, sf_dir):
+    """A session that never set ``spark.sql.shuffle.partitions`` (a
+    plain spark-submit) runs the fixpoint loops, and every conf they
+    touch reads the same afterwards: a key that was unset is unset
+    again."""
+    from kgforge.pipeline import run_pipeline
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.constraintPropagation.enabled",
+    )
+
+    def conf():
+        return {k: spark.conf.getAll.get(k, "unset") for k in keys}
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.unset("spark.sql.shuffle.partitions")
+    try:
+        before = conf()
+        assert before["spark.sql.shuffle.partitions"] == "unset"
+        edges = spark.createDataFrame([("a", "b"), ("b", "c")], "parent string, child string")
+        runs = {
+            "transitive_closure": lambda: graph.transitive_closure(edges).count(),
+            "transitive_closure_seminaive": lambda: graph.transitive_closure_seminaive(edges).count(),
+            "connected_components": lambda: graph.connected_components(edges).count(),
+            "run_pipeline": lambda: run_pipeline(spark, sf_dir),
+        }
+        for name, run in runs.items():
+            run()
+            assert conf() == before, name
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def test_entry_smoke(spark):
@@ -439,11 +478,36 @@ def test_normalize_py_matches_reference_semantics():
 
 
 def test_iri_encode_udf_matches_quote(spark):
-    from kgforge.normalize import iri_encode_udf
+    import random
+    import urllib.parse
+
+    from kgforge.normalize import iri_encode_col, iri_encode_udf
 
     df = spark.createDataFrame([("100 SNOW",), ("a#b/c",), ("plain",)], "s string")
     got = {r[0] for r in df.select(iri_encode_udf("s")).collect()}
     assert got == {"100%20SNOW", "a%23b/c", "plain"}
+    # seeded random Unicode: printable ASCII, tab, accented letters,
+    # CJK and emoji, against the reference's urllib.parse.quote
+    rng = random.Random(11)
+    alphabet = [chr(c) for c in range(32, 127)] + list("\téüñÅßø中文字日本😀🚀")
+    strings = ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 16))) for _ in range(2000)]
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    rows = df.select("s", iri_encode_col(F.col("s")).alias("e"), iri_encode_udf("s").alias("u")).collect()
+    bad = [(r.s, r.e, r.u) for r in rows if not r.e == r.u == urllib.parse.quote(r.s)]
+    assert not bad, bad[:5]
+
+
+def test_ntriples_line_valid_for_markup_in_numbers(spark):
+    """A part number holding ``<``, ``>`` and ``"`` renders as a valid
+    N-Triples line: every IRI is percent-encoded (IRIREF grammar)."""
+    import re
+
+    from kgforge import materialize
+
+    edges = spark.createDataFrame([('A<1>"x"', "B 2>")], "parent string, child string")
+    (line,) = [r.line for r in materialize.ntriples_lines(materialize.bom_triples(edges)).collect()]
+    iri = r'<[^\x00-\x20<>"{}|^`\\]*>'
+    assert re.fullmatch(f"{iri} {iri} {iri} \\.", line), line
 
 
 def test_cli_report_flags(sf_dir, tmp_path):
@@ -804,3 +868,86 @@ def test_level_stack_routed_property_random_sequences(spark):
         for r in graph.level_stack_decode_routed(df, max_level=4).collect()
     )
     assert got == want and want
+
+
+def test_import_workbook_writes_one_consistent_table(spark, tmp_path):
+    """The workbook import's write path on a small generated workbook:
+    the returned per-predicate counts, the committed triple table, the
+    N-Triples files and the manifest all agree with hand-counted
+    triples, and each bucket directory holds one file."""
+    import json
+
+    from kgforge.pipeline import import_workbook
+    from kgforge.schema import ONT, RDF_TYPE, RDFS_LABEL
+    from tests.util import write_xlsx
+
+    pad = [["export"]] * 4  # the reader skips 4 banner rows
+    parts_header = ["Number", "Name", "Type", "Source", "View", "State", "Revision", "Container"]
+    path = write_xlsx(
+        str(tmp_path / "wb.xlsx"),
+        sheets={
+            "WTPart-Sheet": pad + [
+                parts_header,
+                ["100", "Sled", "Part", "Make", "Design", "RELEASED", "A", "Lib"],
+                ["200", "Drive Belt", "Part", "Buy", "Design", "DESIGN", "B", "Lib"],
+                ["300", "Track", "Part", "Make", "Design", "RELEASED", "A", "Lib"],
+                ["400", "Spare Track", "Part", "Make", "Design", "RELEASED", None, None],
+            ],
+            "BOM-Sheet": pad + [
+                ["Level", "Number"], [0, "100"], [1, "200"], [2, "300"], [1, "400"],
+            ],
+            "WTPartAlternateLink-Sheet": pad + [
+                ["Child Part Number", "Replacement Part Number", "Replacement Type"],
+                ["300", "400", "alternate"],
+            ],
+            "WTPartDescribeLink-Sheet": pad + [
+                ["Document Number", "Part Number", "Document Revision",
+                 "Document Owning Organization", "Document Container"],
+                ["D1", "100", "1", "Org", "Docs"],
+                ["D1", "200", "1", "Org", "Docs"],
+            ],
+        },
+    )
+    out = tmp_path / "kg"
+    stats = import_workbook(spark, path, out_dir=str(out))
+
+    # edges 100-200, 200-300, 100-400; closure adds 100-300; 3 parts
+    # with every metadata field, one without revision and container
+    want = {
+        RDF_TYPE: 4 + 1,
+        ONT + "name": 4,
+        RDFS_LABEL: 4,
+        ONT + "hasPartType": 4,
+        ONT + "hasView": 4,
+        ONT + "hasState": 4,
+        ONT + "hasSource": 4,
+        ONT + "hasRevision": 3 + 1,
+        ONT + "inContainer": 3 + 1,
+        ONT + "hasOrganization": 1,
+        ONT + "hasComponent": 3,
+        ONT + "usedIn": 3,
+        ONT + "partOfAssembly": 4,
+        ONT + "hasAlternate": 1,
+        ONT + "describes": 2,
+    }
+    written = resume.read_triples(spark, str(out))
+    assert stats["per_predicate"] == want
+    assert {r["pred"]: r["count"] for r in written.groupBy("pred").count().collect()} == want
+    assert (stats["n_parts"], stats["n_edges"]) == (4, 3)
+    total = stats["total_triples"]
+    assert total == sum(want.values())
+
+    lines = [
+        ln
+        for f in (out / "ntriples").glob("part-*")
+        for ln in f.read_text().splitlines()
+    ]
+    assert len(lines) == total
+
+    manifest = json.loads((out / "_manifest.json").read_text())
+    assert len(manifest["committed"]) == resume.DEFAULT_BUCKETS
+    assert sum(v["n_triples"] for v in manifest["committed"].values()) == total
+    bucket_dirs = sorted((out / "triples").glob("subj_bucket=*"))
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
