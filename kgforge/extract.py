@@ -9,8 +9,8 @@ Two extractors:
 2. :func:`detect_mentions_dictionary` — dictionary-based batched mention
    detection as a vectorized pandas UDF (the north-star stage: scan free
    text for any canonical name). One compiled alternation automaton per
-   executor, Arrow-batched; at cluster scale the dictionary rides a
-   Spark broadcast variable exactly as here.
+   Python worker, Arrow-batched; small dictionaries take the JVM
+   regexp engine instead (``engine="auto"``).
 """
 
 from __future__ import annotations
@@ -97,7 +97,7 @@ def compile_dictionary_pattern(names: list[str], overlapping: bool = False):
 
 
 # Executor-local automaton cache: the compiled trie is rebuilt at most
-# once per (pattern/broadcast id, mode) per Python worker process,
+# once per (pattern, mode) per Python worker process,
 # regardless of how many Arrow batches or tasks it sees.
 _DETECTOR_CACHE: dict = {}
 
@@ -122,29 +122,12 @@ def _detect_batch(texts: pd.Series, pattern_str: str | None, overlapping: bool) 
     return _scan(texts, pattern, overlapping)
 
 
-def _detect_batch_broadcast(texts: pd.Series, bc, bc_id: int, overlapping: bool) -> pd.Series:
-    """Broadcast-dictionary twin of :func:`_detect_batch`: the name list
-    rides a Spark broadcast (once per executor); the automaton is
-    compiled once per worker keyed by the broadcast id."""
-    key = (bc_id, overlapping)
-    pattern = _DETECTOR_CACHE.get(key)
-    if pattern is None:
-        pattern = compile_dictionary_pattern(bc.value, overlapping)
-        _DETECTOR_CACHE[key] = pattern
-    return _scan(texts, pattern, overlapping)
-
-
-def make_dictionary_detector(names=None, overlapping: bool = False, broadcast=None):
+def make_dictionary_detector(names, overlapping: bool = False):
     """Build a vectorized detector over the canonical-name dictionary.
 
-    Dictionary shipping, by scale:
-
-    - ``names`` (list): the word list rides the serialized UDF closure —
-      fine for small dictionaries, but re-shipped with every task.
-    - ``broadcast`` (``sc.broadcast(names)`` handle): the list crosses
-      the wire once per executor via Spark's broadcast machinery (the
-      10^7-name path); each Python worker compiles the automaton once
-      and caches it process-wide (_DETECTOR_CACHE).
+    The pattern string rides the serialized UDF closure; each Python
+    worker compiles the automaton once and caches it process-wide
+    (_DETECTOR_CACHE).
 
     The automaton is a prefix-trie regex — shared prefixes walked like
     an Aho-Corasick goto function using only the stdlib engine; a true
@@ -159,23 +142,6 @@ def make_dictionary_detector(names=None, overlapping: bool = False, broadcast=No
     matches equal exactly the set of dictionary names contained in the
     text, which is what the DuckDB oracle checks.
     """
-    if (names is None) == (broadcast is None):
-        raise ValueError("pass exactly one of names / broadcast")
-
-    if broadcast is not None:
-        # Spark's broadcast id is unique per broadcast for the app's
-        # lifetime; captured driver-side it rides the closure as a plain
-        # int. (id(broadcast.value) is NOT safe as a key: CPython ids are
-        # reused after GC, so in a long-lived worker a second dictionary
-        # could alias the first one's cached automaton.)
-        bc_id = broadcast._jbroadcast.id()
-
-        @pandas_udf("array<string>")
-        def detect(texts):
-            return _detect_batch_broadcast(texts, broadcast, bc_id, overlapping)
-
-        return detect
-
     pattern = compile_dictionary_pattern(names, overlapping)
     pattern_str = None if pattern is None else pattern.pattern
 
@@ -223,7 +189,6 @@ def detect_mentions_dictionary(
     entities: DataFrame,
     names: list[str] | None = None,
     overlapping: bool = False,
-    use_broadcast: bool = False,
     engine: str = "auto",
 ) -> DataFrame:
     """Dictionary mention detection over free text -> exploded mention rows.
@@ -231,9 +196,7 @@ def detect_mentions_dictionary(
     The dictionary is collected on the driver (it is the *small* side by
     construction — same assumption the broadcast linking join makes).
     Pass ``names`` to reuse an already-collected dictionary across
-    calls; ``use_broadcast=True`` ships it as a Spark broadcast variable
-    (once per executor) instead of inside each task's UDF closure — the
-    large-dictionary path.
+    calls.
 
     ``engine``: ``"python"`` scans with the trie automaton in an
     Arrow-batched pandas UDF; ``"jvm"`` evaluates the SAME trie
@@ -270,11 +233,7 @@ def detect_mentions_dictionary(
         ).filter(F.col("mention") != "")
     if engine != "python":  # pragma: no cover
         raise ValueError(f"unknown engine {engine!r}")
-    if use_broadcast:
-        bc = transcripts.sparkSession.sparkContext.broadcast(names)
-        detect = make_dictionary_detector(broadcast=bc, overlapping=overlapping)
-    else:
-        detect = make_dictionary_detector(names=names, overlapping=overlapping)
+    detect = make_dictionary_detector(names, overlapping=overlapping)
     return (
         transcripts.withColumn("mentions", detect(F.col("text")))
         .select(

@@ -11,11 +11,9 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark.sql.types import StructField, StructType
 
 
 def _fixpoint_partitions(spark, n_rows: int, rows_per_partition: int = 10_000) -> int:
@@ -304,8 +302,7 @@ def transitive_closure(
                 # lazy: the loop-entry count materializes it
                 .localCheckpoint(eager=False)
             )
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _constraint_propagation_off(spark, configured, aqe_off=False):
+    with _constraint_propagation_off(spark, aqe_off=False):
         closure = e
         exact = e
         # castable: |e| came with the probe agg; dictionary path: this
@@ -659,115 +656,68 @@ def evolves_to(versions: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------ level-stack
-def level_stack_decode(rows: DataFrame, attrs: tuple[str, ...] = ()) -> DataFrame:
-    """G1 (spreadsheet_loader.py:1160-1182): order-dependent decode of a
-    (group_id, row_idx, level, number) hierarchy — keep a stack of the
-    last-seen part per level; a row at level L emits edge
-    (stack[L-1] -> number) and clears deeper levels. Any ``attrs``
-    columns ride the child row onto the emitted edge (reference
-    parse_part_usage :1262-1318 carries quantity/uom/find_number).
-
-    Implemented with grouped ``applyInPandas`` (Arrow-batched, stateful
-    *within* a group, groups are bounded: one sheet / one conversation)
-    — the one place per-group sequential state is inherent (SURVEY §7.4).
-    Exact on every input, including stale-stack shapes the window form
-    cannot express; the output schema follows the input's ``number``
-    and ``attrs`` types.
-    """
-    attr_fields = [rows.schema[a] for a in attrs]
-    out_schema = StructType(
-        [
-            StructField("parent", rows.schema["number"].dataType),
-            StructField("child", rows.schema["number"].dataType),
-            *attr_fields,
-        ]
-    )
-    cols = ["level", "number", *attrs]
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_idx")
-        stack: dict[int, str] = {}
-        out = []
-        for level, number, *extra in zip(*(pdf[c] for c in cols)):
-            lvl = int(level)
-            if lvl > 0 and (lvl - 1) in stack:
-                out.append((stack[lvl - 1], number, *extra))
-            stack[lvl] = number
-            for deeper in [k for k in stack if k > lvl]:
-                del stack[deeper]
-        return pd.DataFrame(out, columns=["parent", "child", *attrs])
-
-    return rows.groupBy("group_id").applyInPandas(decode, schema=out_schema)
-
-
-def level_stack_decode_window(
+def level_stack_decode(
     rows: DataFrame, max_level: int, attrs: tuple[str, ...] = ()
 ) -> DataFrame:
-    """G1 as pure window expressions (no Python): parent of a level-L row
-    is the last preceding row at level L-1; any ``attrs`` columns ride
-    the child row onto the emitted edge unchanged. Exact when levels
-    never jump *down* by 2+ and back (no stale stack entries) — which
-    holds for our fixtures; the applyInPandas variant above is the
-    general decoder."""
+    """G1 (spreadsheet_loader.py:1160-1182): order-dependent decode of a
+    (group_id, row_idx, level, number) hierarchy. The reference keeps a
+    stack of the last-seen part per level; a row at level L emits edge
+    (stack[L-1] -> number) and clears deeper levels. Any ``attrs``
+    columns ride the child row onto the emitted edge unchanged
+    (reference parse_part_usage :1262-1318 carries
+    quantity/uom/find_number).
+
+    Exact as window expressions, no Python: stack key L-1 is set by a
+    level-(L-1) row and cleared by any later row below L-1, so a row at
+    level L >= 1 has a parent only when the last preceding row of its
+    group with level <= L-1 sits at exactly L-1, and that row's number
+    is the parent. One window column per k < ``max_level`` holds the
+    last (level, number) at level <= k. A row above ``max_level``
+    raises instead of being dropped; rows at level <= 0 emit nothing.
+    Output: ``parent`` and ``child`` typed like ``number``, then
+    ``attrs``.
+    """
     w = (
         Window.partitionBy("group_id")
         .orderBy("row_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    lasts = [
-        F.last(F.when(F.col("level") == lvl, F.col("number")), ignorenulls=True).over(w).alias(f"last_l{lvl}")
-        for lvl in range(max_level)
-    ]
-    df = rows.select("group_id", "row_idx", "level", "number", *attrs, *lasts)
-    parent = F.lit(None).cast("string")
-    for lvl in range(1, max_level + 1):
-        parent = F.when(F.col("level") == lvl, F.col(f"last_l{lvl - 1}")).otherwise(parent)
+    lvl = F.col("level")
+    # bound once by name: reading the struct fields off an inline window
+    # expression plans one window column per field
+    lasts = rows.select(
+        "level",
+        "number",
+        *attrs,
+        *(
+            F.last(F.when(lvl <= k, F.struct("level", "number")), ignorenulls=True)
+            .over(w)
+            .alias(f"__le{k}")
+            for k in range(max_level)
+        ),
+    )
+    parent = F.when(
+        lvl > max_level,
+        F.raise_error(
+            F.concat(
+                F.lit(f"level_stack_decode: level above max_level={max_level}: "),
+                lvl.cast("string"),
+            )
+        ),
+    )
+    for k in range(max_level):
+        last = F.col(f"__le{k}")
+        parent = parent.when(
+            (lvl == k + 1) & (last["level"] == k), last["number"]
+        )
     return (
-        df.withColumn("parent", parent)
+        lasts.select(parent.alias("parent"), F.col("number").alias("child"), *attrs)
         .filter(F.col("parent").isNotNull())
-        .select("parent", F.col("number").alias("child"), *attrs)
     )
 
 
-def level_stack_decode_routed(
-    rows: DataFrame, max_level: int, attrs: tuple[str, ...] = ()
-) -> DataFrame:
-    """G1 decode that is both exact and JVM-fast: groups whose level
-    sequence the window form decodes exactly go through
-    :func:`level_stack_decode_window` (whole-stage codegen, no Python);
-    the rest go through the general stateful decoder.
-
-    Router predicate (one window expression): the window form can only
-    mis-attach when a row's stack parent is *stale* — the last level-L-1
-    row was cleared by a shallower row before a level-L row arrived. To
-    reach level L from below L-1 without refreshing L-1, some step must
-    jump UP by >= 2 levels, so ``level - lag(level) >= 2`` anywhere in a
-    group is a sufficient (conservative) violation flag. A group holding
-    any ``level > max_level`` row is ALSO flagged — the window form
-    enumerates parent slots only up to ``max_level``, so an undersized
-    caller value would silently drop that group's deep edges; routing it
-    to the stateful decoder keeps output independent of the caller's
-    bound. Clean groups — in well-formed BOM exports, virtually all of
-    them — never cross into Python; a malformed export degrades that
-    group to the exact decoder instead of silently mis-attaching.
-    """
-    w = Window.partitionBy("group_id").orderBy("row_idx")
-    up2 = (F.col("level") - F.lag("level").over(w)) >= 2
-    too_deep = F.col("level") > max_level
-    # group flag as an unordered window max: ONE shuffle by group_id,
-    # whose partitioning the downstream decode windows then reuse (a
-    # groupBy+rejoin would shuffle the rows twice)
-    tagged = rows.withColumn(
-        "__viol",
-        F.max((F.coalesce(up2, F.lit(False)) | too_deep).cast("int"))
-        .over(Window.partitionBy("group_id"))
-        == 1,
-    )
-    clean = tagged.filter(~F.col("__viol")).drop("__viol")
-    dirty = tagged.filter(F.col("__viol")).drop("__viol")
-    return level_stack_decode_window(clean, max_level, attrs).unionByName(
-        level_stack_decode(dirty, attrs)
-    )
+# the frozen gate's name for the same decoder
+level_stack_decode_routed = level_stack_decode
 
 
 def chains(edges: DataFrame, n_hops: int) -> DataFrame:

@@ -24,12 +24,13 @@ Scale strategy: the simple shape is a plain distributed CSV scan. The
 hierarchical shape needs per-file row ORDER, which a split CSV scan does
 not guarantee — each file is read whole (``wholetext``), split to
 (file, row_idx, line), per-line CSV-parsed JVM-side (``from_csv``), and
-decoded by :func:`kgforge.graph.level_stack_decode_routed` with the file
-as the group. One export file is one bounded sheet (the reference loads
-the whole CSV on one machine); a corpus of many exports parallelizes
-across files. Embedded newlines inside quoted cells are not supported in
-the hierarchical shape (documented limitation; the reference's exports
-never produce them).
+decoded by :func:`kgforge.graph.level_stack_decode` (window expressions,
+no Python) with the file as the group. ``read_bom_csv`` and
+``convert_hierarchical_bom`` share that one parse. One export file is
+one bounded sheet (the reference loads the whole CSV on one machine); a
+corpus of many exports parallelizes across files. Embedded newlines
+inside quoted cells are not supported in the hierarchical shape
+(documented limitation; the reference's exports never produce them).
 """
 
 from __future__ import annotations
@@ -66,10 +67,15 @@ def read_bom_csv(
     lower = {str(c).strip().lower(): c for c in columns}
 
     if "number" in lower and "level" in lower:
-        return _read_hierarchical(
-            spark, path, columns, lower["number"], lower["level"],
-            mode=hierarchical_mode,
-        )
+        levels = _read_hierarchical(spark, path, columns, lower)
+        if hierarchical_mode == "roundrobin":
+            # the reference's current --bom semantics, no dedup (:252
+            # returns the raw edge list; the importer's edge store dedups
+            # by MERGE)
+            return graph.level_stack_round_robin(levels).dropDuplicates()
+        if hierarchical_mode != "stack":  # pragma: no cover
+            raise ValueError(f"unknown hierarchical_mode {hierarchical_mode!r}")
+        return _decode_levels(levels).dropDuplicates()
 
     pair = sniff.resolve_edge_columns(columns)
     if pair is None:
@@ -91,16 +97,12 @@ def read_bom_csv(
 
 
 def _read_hierarchical(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    number_col: str,
-    level_col: str,
-    mode: str = "stack",
+    spark: SparkSession, path: str, columns: list[str], lower: dict[str, str]
 ) -> DataFrame:
-    """Order-preserving hierarchical decode: one file = one group."""
-    n_idx = columns.index(number_col)
-    l_idx = columns.index(level_col)
+    """Order-preserving parse of Number+Level files into
+    ``(group_id, row_idx, level, number)`` rows: one file = one group."""
+    n_idx = columns.index(lower["number"])
+    l_idx = columns.index(lower["level"])
     # positional schema: header casing/spacing never breaks from_csv
     line_schema = ", ".join(f"c{i} string" for i in range(len(columns)))
 
@@ -111,7 +113,7 @@ def _read_hierarchical(
         "group_id",
         F.posexplode(F.split(F.col("value"), "\r?\n")).alias("row_idx", "line"),
     )
-    parsed = (
+    return (
         lines.filter((F.col("row_idx") > 0) & (F.trim(F.col("line")) != ""))
         .select(
             "group_id",
@@ -130,18 +132,13 @@ def _read_hierarchical(
         # (:1167-1174); the int cast nulls the former
         .filter(F.col("level").isNotNull() & (F.col("number") != ""))
     )
-    if mode == "roundrobin":
-        # the reference's current --bom semantics, no dedup (:252 returns
-        # the raw edge list; the importer's edge store dedups by MERGE)
-        return graph.level_stack_round_robin(parsed).dropDuplicates()
-    if mode != "stack":  # pragma: no cover
-        raise ValueError(f"unknown hierarchical_mode {mode!r}")
-    max_level = parsed.agg(F.max("level")).first()[0]
-    if max_level is None:
-        return spark.createDataFrame([], "parent string, child string")
-    return graph.level_stack_decode_routed(
-        parsed, max_level=int(max_level)
-    ).dropDuplicates()
+
+
+def _decode_levels(levels: DataFrame) -> DataFrame:
+    """Level-stack decode sized by the rows' own deepest level (one
+    ``max(level)`` job); no rows decode to no edges."""
+    max_level = levels.agg(F.max("level")).first()[0]
+    return graph.level_stack_decode(levels, max_level=int(max_level or 0))
 
 
 def convert_hierarchical_bom(spark: SparkSession, path: str) -> DataFrame:
@@ -152,40 +149,11 @@ def convert_hierarchical_bom(spark: SparkSession, path: str) -> DataFrame:
     distinct set is the published 1,543), so the converter keeps row
     multiplicity; the ``read_bom_csv`` ingestion path dedups.
     """
-    header_df = spark.read.option("header", True).csv(path)
-    columns = [c for c in header_df.columns]
+    columns = spark.read.option("header", True).csv(path).columns
     lower = {str(c).strip().lower(): c for c in columns}
     if "number" not in lower or "level" not in lower:
         raise ValueError(f"not a hierarchical BOM header: {columns}")
-    n_idx = columns.index(lower["number"])
-    l_idx = columns.index(lower["level"])
-    line_schema = ", ".join(f"c{i} string" for i in range(len(columns)))
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("group_id"), F.col("value")
-    )
-    lines = files.select(
-        "group_id",
-        F.posexplode(F.split(F.col("value"), "\r?\n")).alias("row_idx", "line"),
-    )
-    parsed = (
-        lines.filter((F.col("row_idx") > 0) & (F.trim(F.col("line")) != ""))
-        .select(
-            "group_id",
-            "row_idx",
-            F.from_csv(F.col("line"), line_schema).alias("r"),
-        )
-        .select(
-            "group_id",
-            "row_idx",
-            F.col(f"r.c{l_idx}").try_cast("int").alias("level"),
-            normalize_number_col(F.col(f"r.c{n_idx}")).alias("number"),
-        )
-        .filter(F.col("level").isNotNull() & (F.col("number") != ""))
-    )
-    max_level = parsed.agg(F.max("level")).first()[0]
-    if max_level is None:
-        return spark.createDataFrame([], "parent string, child string")
-    return graph.level_stack_decode_routed(parsed, max_level=int(max_level))
+    return _decode_levels(_read_hierarchical(spark, path, columns, lower))
 
 
 def read_bom_csv_by_name(
@@ -455,8 +423,8 @@ def read_excel_bom_levels(
     generate_bom_from_excel :1160-1182, incl. its 'Action'-in-first-row
     header promotion :1144-1148), emitted as
     ``(group_id, row_idx, level, number)`` for the distributed
-    level-stack decode. Feed to :func:`kgforge.graph
-    .level_stack_decode_routed` (one sheet = one ordered group)."""
+    level-stack decode. Feed to :func:`kgforge.graph.level_stack_decode`
+    (one sheet = one ordered group)."""
     rows: list[tuple] = []
     for sheet_name, t in _excel_tables(path, sheets):
         if t.rows:
@@ -497,13 +465,7 @@ def read_excel_bom_edges(
     """Level-stack decode of :func:`read_excel_bom_levels` into
     deduplicated ``(parent, child)`` edges (generate_bom_from_excel's
     hierarchical branch + its edge dedup :1223)."""
-    levels = read_excel_bom_levels(spark, path, sheets)
-    max_level = levels.agg(F.max("level")).first()[0]
-    if max_level is None:
-        return spark.createDataFrame([], "parent string, child string")
-    return graph.level_stack_decode_routed(
-        levels, max_level=int(max_level)
-    ).dropDuplicates()
+    return _decode_levels(read_excel_bom_levels(spark, path, sheets)).dropDuplicates()
 
 
 def read_excel_alternates(

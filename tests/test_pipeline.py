@@ -3,11 +3,12 @@ semantics, dictionary mention detection, connected components, entry()."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from kgforge import extract, fixtures, graph, linking, resume
+from tests.util import level_stack_oracle
 
 # usage attributes the child row carries onto its edge (reference
 # parse_part_usage)
@@ -22,108 +23,65 @@ def test_strict_mode_raises(spark, sf_dir):
         linking.check_strict(linked)
 
 
+def _decoded(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
 def test_level_stack_stale_entry_cleared(spark):
-    """The tricky case the window variant can't express: after a jump
-    back to a shallow level, deeper stack entries are cleared, so a
-    later deep row with no fresh parent emits nothing
-    (reference stack-clear semantics, spreadsheet_loader.py:1171-1178)."""
-    rows = spark.createDataFrame(
-        [("g", 0, 0, "A"), ("g", 1, 1, "B"), ("g", 2, 2, "C"), ("g", 3, 0, "D"), ("g", 4, 2, "E")],
-        "group_id string, row_idx int, level int, number string",
-    )
-    got = {(r.parent, r.child) for r in graph.level_stack_decode(rows).collect()}
+    """The tricky case: after a jump back to a shallow level, deeper
+    stack entries are cleared, so a later deep row with no fresh parent
+    emits nothing (reference stack-clear semantics,
+    spreadsheet_loader.py:1171-1178)."""
+    data = [("g", 0, 0, "A"), ("g", 1, 1, "B"), ("g", 2, 2, "C"), ("g", 3, 0, "D"), ("g", 4, 2, "E")]
+    rows = spark.createDataFrame(data, "group_id string, row_idx int, level int, number string")
+    got = _decoded(graph.level_stack_decode(rows, max_level=2))
     # E at level 2 must NOT attach to stale B; D cleared levels 1+.
-    assert got == {("A", "B"), ("B", "C")}
-
-
-def test_level_stack_window_matches_applyinpandas(spark, sf_dir):
-    rows = fixtures.load_hierarchy(spark, sf_dir)
-    a = {(r.parent, r.child) for r in graph.level_stack_decode(rows).dropDuplicates().collect()}
-    b = {(r.parent, r.child) for r in graph.level_stack_decode_window(rows, max_level=2).dropDuplicates().collect()}
-    assert a == b
+    assert got == level_stack_oracle(data) == [("A", "B"), ("B", "C")]
 
 
 def test_level_stack_routed_exact_on_stale_stack_groups(spark, sf_dir):
-    """The combined router must equal the exact stateful decoder even
-    when a group's level sequence has a down-jump followed by a level
-    skip (the shape the pure window form silently mis-attaches on), and
-    must still route well-formed groups through the JVM window path."""
+    """The gate's decoder name must equal the Python replay of the
+    reference loop when a group's level sequence has a down-jump
+    followed by a level skip (a stale-stack shape) next to a clean
+    group, and on the fixture hierarchy with its usage attributes."""
     # g-bad replays the stale-entry case; g-ok is a clean hierarchy.
-    rows = spark.createDataFrame(
-        [
-            ("g-bad", 0, 0, "A"), ("g-bad", 1, 1, "B"), ("g-bad", 2, 2, "C"),
-            ("g-bad", 3, 0, "D"), ("g-bad", 4, 2, "E"),
-            ("g-ok", 0, 0, "R"), ("g-ok", 1, 1, "S"), ("g-ok", 2, 2, "T"),
-            ("g-ok", 3, 1, "U"), ("g-ok", 4, 2, "V"),
-        ],
-        "group_id string, row_idx int, level int, number string",
+    data = [
+        ("g-bad", 0, 0, "A"), ("g-bad", 1, 1, "B"), ("g-bad", 2, 2, "C"),
+        ("g-bad", 3, 0, "D"), ("g-bad", 4, 2, "E"),
+        ("g-ok", 0, 0, "R"), ("g-ok", 1, 1, "S"), ("g-ok", 2, 2, "T"),
+        ("g-ok", 3, 1, "U"), ("g-ok", 4, 2, "V"),
+    ]
+    rows = spark.createDataFrame(data, "group_id string, row_idx int, level int, number string")
+    got = _decoded(graph.level_stack_decode_routed(rows, max_level=2))
+    assert got == level_stack_oracle(data)
+    assert set(got) == {("A", "B"), ("B", "C"), ("R", "S"), ("S", "T"), ("R", "U"), ("U", "V")}
+
+    # fixture hierarchy: full rows, including the carried usage attributes
+    h = fixtures.load_hierarchy(spark, sf_dir).select(
+        "group_id", "row_idx", "level", "number", *USAGE_ATTRS
     )
-    want = {(r.parent, r.child) for r in graph.level_stack_decode(rows).collect()}
-    got = {
-        (r.parent, r.child)
-        for r in graph.level_stack_decode_routed(rows, max_level=2).collect()
-    }
-    assert got == want == {("A", "B"), ("B", "C"), ("R", "S"), ("S", "T"), ("R", "U"), ("U", "V")}
-    # the pure window form alone WOULD mis-attach E to stale B
-    wrong = {
-        (r.parent, r.child)
-        for r in graph.level_stack_decode_window(rows, max_level=2).collect()
-    }
-    assert ("B", "E") in wrong
-
-    # fixture hierarchy (all clean groups): router == stateful, with attrs
-    h = fixtures.load_hierarchy(spark, sf_dir)
-    a = {
-        tuple(r)
-        for r in graph.level_stack_decode(h, attrs=USAGE_ATTRS).dropDuplicates().collect()
-    }
-    b = {
-        tuple(r)
-        for r in graph.level_stack_decode_routed(h, max_level=2, attrs=USAGE_ATTRS)
-        .dropDuplicates()
-        .collect()
-    }
-    assert a == b
-
-
-def test_level_stack_routed_undersized_max_level(spark):
-    """An undersized caller max_level must not drop deep edges: groups
-    holding level > max_level rows route to the exact stateful decoder,
-    so the routed output stays identical to the exact decode while clean
-    shallow groups keep the JVM window path."""
-    rows = spark.createDataFrame(
-        [
-            # deep clean group: levels reach 3, caller will claim max 1
-            ("deep", 0, 0, "A"), ("deep", 1, 1, "B"),
-            ("deep", 2, 2, "C"), ("deep", 3, 3, "D"),
-            # shallow clean group: within the bound, stays JVM-side
-            ("shallow", 0, 0, "R"), ("shallow", 1, 1, "S"),
-        ],
-        "group_id string, row_idx int, level int, number string",
+    want = sorted(set(level_stack_oracle(h.collect())), key=repr)
+    got = _decoded(
+        graph.level_stack_decode_routed(h, max_level=2, attrs=USAGE_ATTRS).dropDuplicates()
     )
-    want = {(r.parent, r.child) for r in graph.level_stack_decode(rows).collect()}
-    got = {
-        (r.parent, r.child)
-        for r in graph.level_stack_decode_routed(rows, max_level=1).collect()
-    }
-    assert got == want == {("A", "B"), ("B", "C"), ("C", "D"), ("R", "S")}
+    assert got == want and want
 
 
-def test_usage_window_matches_applyinpandas(spark, sf_dir):
-    """The gate's JVM-only usage decode must equal the general stateful
-    decoder — full rows including the carried usage attributes."""
-    rows = fixtures.load_hierarchy(spark, sf_dir)
-    a = {
-        tuple(r)
-        for r in graph.level_stack_decode(rows, attrs=USAGE_ATTRS).dropDuplicates().collect()
-    }
-    b = {
-        tuple(r)
-        for r in graph.level_stack_decode_window(rows, max_level=2, attrs=USAGE_ATTRS)
-        .dropDuplicates()
-        .collect()
-    }
-    assert a == b
+def test_level_stack_above_max_level_raises(spark):
+    """A caller ``max_level`` below the data's depth raises instead of
+    silently dropping the deep edges; at the true depth the decode
+    equals the Python replay."""
+    data = [
+        # deep group: levels reach 3
+        ("deep", 0, 0, "A"), ("deep", 1, 1, "B"),
+        ("deep", 2, 2, "C"), ("deep", 3, 3, "D"),
+        ("shallow", 0, 0, "R"), ("shallow", 1, 1, "S"),
+    ]
+    rows = spark.createDataFrame(data, "group_id string, row_idx int, level int, number string")
+    with pytest.raises(SparkRuntimeException, match="USER_RAISED_EXCEPTION"):
+        graph.level_stack_decode_routed(rows, max_level=1).collect()
+    got = _decoded(graph.level_stack_decode_routed(rows, max_level=3))
+    assert got == level_stack_oracle(data) == [("A", "B"), ("B", "C"), ("C", "D"), ("R", "S")]
 
 
 def test_dictionary_detector_finds_bracketed_names(spark, sf_dir):
@@ -176,23 +134,6 @@ def test_dictionary_detector_jvm_engine_matches_python(spark, sf_dir):
         assert n_names <= extract.JVM_ENGINE_MAX_NAMES
         auto_plan = auto_df._jdf.queryExecution().executedPlan().toString()
         assert "Python" not in auto_plan and "Arrow" not in auto_plan
-
-
-def test_dictionary_detector_broadcast_matches_closure(spark, sf_dir):
-    """Broadcast-variable dictionary shipping (the 10^7-name path) must
-    produce exactly the closure-shipped detector's output."""
-    t = fixtures.load_transcripts(spark, sf_dir).limit(300).cache()
-    e = fixtures.load_entities(spark, sf_dir)
-    a = sorted(
-        (r.conv_id, r.turn_idx, r.mention)
-        for r in extract.detect_mentions_dictionary(t, e).collect()
-    )
-    b = sorted(
-        (r.conv_id, r.turn_idx, r.mention)
-        for r in extract.detect_mentions_dictionary(t, e, use_broadcast=True).collect()
-    )
-    assert a == b and a
-    t.unpersist()
 
 
 def test_connected_components_vs_union_find(spark, sf_dir):
@@ -833,17 +774,16 @@ def test_cypher_payload_serializes_temporal_and_binary():
 
 
 def test_level_stack_routed_property_random_sequences(spark):
-    """Property: on ARBITRARY level sequences (including down-jumps,
-    level skips, repeated levels, deep nesting) the routed decoder must
-    equal the exact stateful decoder. Random sequences are generated
-    with a fixed-seed RNG across many groups so both router branches
-    (clean window path and stale-stack Python path) are exercised in
-    one run."""
+    """Property: on ARBITRARY level sequences (down-jumps to negative
+    levels, up-jumps of 2+, repeated levels, deep nesting, part numbers
+    repeated within a group) the decoder must equal the Python replay of
+    the reference loop, row for row, including a carried attribute
+    column. A fixed-seed RNG spans many groups."""
     import random
 
     rng = random.Random(20260817)
     rows = []
-    for g in range(40):
+    for g in range(60):
         n = rng.randint(1, 25)
         lvl = 0
         for i in range(n):
@@ -854,20 +794,20 @@ def test_level_stack_routed_property_random_sequences(spark):
             elif r < 0.6:
                 lvl = min(lvl + rng.randint(2, 3), 4)  # up-jump >= 2
             elif r < 0.85:
-                lvl = max(lvl - rng.randint(1, 3), 0)
+                lvl = max(lvl - rng.randint(1, 4), -1)
             # else: stay
-            rows.append((f"g{g:02d}", i, lvl, f"n{g:02d}-{i:02d}"))
+            # a small per-group number pool repeats numbers
+            rows.append((f"g{g:02d}", i, lvl, f"n{g:02d}-{rng.randint(0, 6)}", rng.randint(0, 3)))
     df = spark.createDataFrame(
-        rows, "group_id string, row_idx int, level int, number string"
+        rows, "group_id string, row_idx int, level int, number string, qty int"
     )
-    want = sorted(
-        (r.parent, r.child) for r in graph.level_stack_decode(df).collect()
-    )
-    got = sorted(
-        (r.parent, r.child)
-        for r in graph.level_stack_decode_routed(df, max_level=4).collect()
-    )
+    got = _decoded(graph.level_stack_decode_routed(df, max_level=4, attrs=("qty",)))
+    want = level_stack_oracle(rows)
     assert got == want and want
+    # every shape the property is meant to cover occurred
+    assert any(r[2] < 0 for r in rows)
+    assert any(b[2] - a[2] >= 2 for a, b in zip(rows, rows[1:]) if a[0] == b[0])
+    assert len({(r[0], r[3]) for r in rows}) < len(rows)
 
 
 def test_import_workbook_writes_one_consistent_table(spark, tmp_path):

@@ -103,3 +103,27 @@ def test_sql_corpus_scans_cached_graph(spark, sf_dir):
     # and no Python crossing inside the query-side plan: linking is all
     # JVM expressions, the cache cuts the plan above any UDF anyway
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_hierarchical_imports_run_no_python(spark, tmp_path):
+    """The Number+Level CSV read and the workbook level-stack read decode
+    with window expressions only: neither executed plan crosses into
+    Python."""
+    from kgforge import sources
+    from tests.util import write_xlsx
+
+    csv = tmp_path / "bom.csv"
+    csv.write_text("Number,Level\nA,0\nB,1\nC,2\nD,0\nE,2\n")
+    pad = [["export"]] * 4  # the workbook reader skips 4 banner rows
+    xlsx = write_xlsx(
+        str(tmp_path / "wb.xlsx"),
+        sheets={"BOM-Sheet": pad + [["Level", "Number"], [0, "100"], [1, "200"], [2, "300"], [1, "400"]]},
+    )
+    for edges, want in (
+        (sources.read_bom_csv(spark, str(csv)), {("A", "B"), ("B", "C")}),
+        (sources.read_excel_bom_edges(spark, xlsx), {("100", "200"), ("200", "300"), ("100", "400")}),
+    ):
+        assert {(r.parent, r.child) for r in edges.collect()} == want
+        plan = _plan(edges)
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, node

@@ -48,6 +48,28 @@ def assert_df_matches_oracle(spark_df, sql: str, sf_dir: str) -> None:
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=False, rtol=1e-6)
 
 
+def level_stack_oracle(rows) -> list[tuple]:
+    """Plain-Python replay of the reference's level-stack loop
+    (spreadsheet_loader.py:1160-1182) over collected
+    ``(group_id, row_idx, level, number, *attrs)`` rows: per group in
+    ``row_idx`` order, a row at level L > 0 emits
+    ``(stack[L-1], number, *attrs)`` when that key is set, then sets
+    ``stack[L]`` and clears every deeper key. Returns the sorted edges."""
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(r[0], []).append(tuple(r))
+    out = []
+    for grp in groups.values():
+        stack: dict = {}
+        for _, _, level, number, *attrs in sorted(grp, key=lambda r: r[1]):
+            if level > 0 and level - 1 in stack:
+                out.append((stack[level - 1], number, *attrs))
+            stack[level] = number
+            for deeper in [k for k in stack if k > level]:
+                del stack[deeper]
+    return sorted(out, key=repr)
+
+
 def write_xlsx(path: str, sheets: dict, date1904: bool = False, num_fmts: dict | None = None):
     """Build a minimal real .xlsx for reader tests (zipfile + literal
     XML — the same container format kgforge.xlsx parses).
