@@ -9,7 +9,7 @@ conversation transcripts ``(conv_id, turn_idx, role, text, tool, ts)``.
 Module map (SURVEY.md §7.0):
 
 - :mod:`kgforge.session`       Spark session factory (AQE, Arrow, shuffle tuning)
-- :mod:`kgforge.schema`        StructTypes for transcripts / entities / triples / manifest
+- :mod:`kgforge.schema`        the entity StructType and the RDF vocabulary
 - :mod:`kgforge.fixtures`      deterministic derivation of transcripts & side tables
 - :mod:`kgforge.normalize`     scalar normalization & validation (SURVEY §2.2)
 - :mod:`kgforge.extract`       mention detection + per-turn triple extraction (§2.5)

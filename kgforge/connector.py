@@ -116,6 +116,53 @@ def _send_with_retries(
     ) from last_exc
 
 
+def _deliver(
+    df: DataFrame,
+    item: Callable,
+    encode: Callable[[list], tuple[bytes, str]],
+    transport: Transport,
+    batch_size: int,
+    max_retries: int,
+    base_backoff_s: float,
+    count_key: str,
+) -> dict:
+    """Shared delivery loop: each partition buffers ``item(row)`` values,
+    and every ``batch_size`` of them (then the remainder) becomes one
+    ``encode(chunk) -> (payload, batch_id)`` sent with retries. Stats
+    come back through accumulators; ``count_key`` names the item count."""
+    sc = df.sparkSession.sparkContext
+    chunks_acc = sc.accumulator(0)
+    items_acc = sc.accumulator(0)
+    attempts_acc = sc.accumulator(0)
+
+    def send(partition):
+        buf: list = []
+
+        def flush():
+            if not buf:
+                return
+            payload, batch_id = encode(buf)
+            _send_with_retries(
+                payload, batch_id, transport, max_retries, base_backoff_s, attempts_acc
+            )
+            chunks_acc.add(1)
+            items_acc.add(len(buf))
+            buf.clear()
+
+        for row in partition:
+            buf.append(item(row))
+            if len(buf) >= batch_size:
+                flush()
+        flush()
+
+    df.foreachPartition(send)
+    return {
+        "chunks_delivered": chunks_acc.value,
+        count_key: items_acc.value,
+        "attempts": attempts_acc.value,
+    }
+
+
 def deliver_ntriples(
     lines: DataFrame,
     transport: Transport,
@@ -130,39 +177,16 @@ def deliver_ntriples(
     or an exception counts as a failed attempt and is retried with
     exponential backoff; exhausting retries raises, failing the task.
     """
-    spark = lines.sparkSession
-    sc = spark.sparkContext
-    chunks_acc = sc.accumulator(0)
-    lines_acc = sc.accumulator(0)
-    attempts_acc = sc.accumulator(0)
 
-    def send(partition):
-        buf: list[str] = []
+    def encode(chunk: list[str]) -> tuple[bytes, str]:
+        payload = ("\n".join(chunk) + "\n").encode("utf-8")
+        batch_id = hashlib.sha256("\n".join(sorted(chunk)).encode("utf-8")).hexdigest()[:32]
+        return payload, batch_id
 
-        def flush():
-            if not buf:
-                return
-            payload = ("\n".join(buf) + "\n").encode("utf-8")
-            batch_id = hashlib.sha256("\n".join(sorted(buf)).encode("utf-8")).hexdigest()[:32]
-            _send_with_retries(
-                payload, batch_id, transport, max_retries, base_backoff_s, attempts_acc
-            )
-            chunks_acc.add(1)
-            lines_acc.add(len(buf))
-            buf.clear()
-
-        for row in partition:
-            buf.append(row["line"])
-            if len(buf) >= batch_size:
-                flush()
-        flush()
-
-    lines.foreachPartition(send)
-    return {
-        "chunks_delivered": chunks_acc.value,
-        "lines_delivered": lines_acc.value,
-        "attempts": attempts_acc.value,
-    }
+    return _deliver(
+        lines, lambda row: row["line"], encode, transport,
+        batch_size, max_retries, base_backoff_s, "lines_delivered",
+    )
 
 
 # ------------------------------------------------------------- Cypher leg
@@ -226,40 +250,15 @@ def deliver_cypher_batches(
     MERGE-based store (or an id-deduping transport) stays exactly-once.
     Delivery stats come back through accumulators.
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    chunks_acc = sc.accumulator(0)
-    rows_acc = sc.accumulator(0)
-    attempts_acc = sc.accumulator(0)
     columns = df.columns
 
-    def send(partition):
-        buf: list[dict] = []
+    def encode(chunk: list[dict]) -> tuple[bytes, str]:
+        canon = json.dumps(
+            [statement, sorted(json.dumps(r, sort_keys=True, default=str) for r in chunk)]
+        ).encode("utf-8")
+        return cypher_batch_payload(statement, chunk), hashlib.sha256(canon).hexdigest()[:32]
 
-        def flush():
-            if not buf:
-                return
-            canon = json.dumps(
-                [statement, sorted(json.dumps(r, sort_keys=True, default=str) for r in buf)]
-            ).encode("utf-8")
-            batch_id = hashlib.sha256(canon).hexdigest()[:32]
-            payload = cypher_batch_payload(statement, buf)
-            _send_with_retries(
-                payload, batch_id, transport, max_retries, base_backoff_s, attempts_acc
-            )
-            chunks_acc.add(1)
-            rows_acc.add(len(buf))
-            buf.clear()
-
-        for row in partition:
-            buf.append({c: row[c] for c in columns})
-            if len(buf) >= batch_size:
-                flush()
-        flush()
-
-    df.foreachPartition(send)
-    return {
-        "chunks_delivered": chunks_acc.value,
-        "rows_delivered": rows_acc.value,
-        "attempts": attempts_acc.value,
-    }
+    return _deliver(
+        df, lambda row: {c: row[c] for c in columns}, encode, transport,
+        batch_size, max_retries, base_backoff_s, "rows_delivered",
+    )

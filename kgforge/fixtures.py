@@ -309,76 +309,3 @@ def load_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts"),
     )
 
-
-# --------------------------------------------------------- messy-export path
-# Excel-style header names the reference's parser keys on
-# (spreadsheet_loader.py parse_parts row.get("Number") etc.), mapped to
-# the fixed-schema column names every downstream operator uses.
-_EXCEL_HEADERS = {
-    "Number": "number", "Name": "name", "Type": "type", "Source": "source",
-    "View": "view", "State": "state", "Revision": "revision",
-    "Container": "container", "Part Type": "part_type",
-}
-
-_MESSY_SCHEMA = (
-    "sheet_idx int, row_idx int, number string, name string, type string, "
-    "source string, view string, state string, revision string, "
-    "container string, part_type string"
-)
-
-
-def load_entities_raw_messy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Messy-export emulation (SURVEY §1.3): render the raw entity
-    sheets as cell grids with the reference's Excel quirks — a 4-row
-    banner preamble on sheet 0 (the skiprows path,
-    spreadsheet_loader.py:59-61) and, on sheet 1, a junk header row with
-    the real header landing in the first data row (the header-dup
-    repair :62-68) — then recover the table through
-    :func:`kgforge.sniff.sniff_sheet`.
-
-    Driver-side by design: sniffing is per-sheet, header-region-sized
-    work. At scale the sniffed header parameterizes a distributed read
-    with an explicit schema; only this emulation materializes whole
-    sheets on the driver (fixture sizes only). ``row_idx`` is the row's
-    position within its sheet — relative order matches
-    :func:`load_entities_raw`, so the last-wins dedup elects identical
-    winners (pytest-asserted)."""
-    from kgforge import sniff
-
-    raw = load_entities_raw(spark, sf_dir).orderBy("sheet_idx", "row_idx").collect()
-    excel_cols = list(_EXCEL_HEADERS)
-    header = excel_cols
-    sheets: dict[int, list[list]] = {}
-    for r in raw:
-        sheets.setdefault(r["sheet_idx"], []).append(
-            [r[_EXCEL_HEADERS[c]] for c in excel_cols]
-        )
-
-    blank = [None] * len(header)
-    banner = [
-        ["Export report"] + [None] * (len(header) - 1),
-        blank,
-        ["Generated by PLM"] + [None] * (len(header) - 1),
-        blank,
-    ]
-    junk_header = [f"Unnamed: {i}" for i in range(len(header))]
-    grids = {
-        # sheet 0: banner preamble, then the clean header (skiprows path)
-        0: banner + [header] + sheets.get(0, []),
-        # sheet 1: preamble + a junk header row, with the REAL header
-        # duplicated into the first data row — the export bug the
-        # header-promotion repair exists for
-        1: banner + [junk_header] + [header] + sheets.get(1, []),
-    }
-
-    out = None
-    for sheet_idx, grid in sorted(grids.items()):
-        cols, rows = sniff.sniff_sheet(grid)
-        idx = {c: cols.index(c) for c in excel_cols}
-        data = [
-            [sheet_idx, i] + [row[idx[c]] for c in excel_cols]
-            for i, row in enumerate(rows)
-        ]
-        df = spark.createDataFrame(data, _MESSY_SCHEMA)
-        out = df if out is None else out.unionByName(df)
-    return out

@@ -335,14 +335,9 @@ def main(argv: list[str] | None = None) -> None:
             ).option("header", True).csv(args.emit_candidates)
             print(json.dumps({"report": "bom_name_candidates", "out": args.emit_candidates}))
         else:
-            # 4-column report contract (reference writes name columns
-            # only, :1107-1110); the *_name_missing flags are internal
-            # tally inputs — same projection as reports.write_reports
-            reports.bom_by_name(edges, entities).select(
-                "parent_name", "child_name", "parent", "child"
-            ).write.mode("overwrite").option(
-                "header", True
-            ).csv(args.generate_bom_by_name)
+            reports.bom_by_name_report(edges, entities).write.mode(
+                "overwrite"
+            ).option("header", True).csv(args.generate_bom_by_name)
             print(json.dumps({"report": "bom_by_name", "out": args.generate_bom_by_name}))
         return
 

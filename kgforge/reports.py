@@ -51,6 +51,13 @@ def bom_by_name(edges: DataFrame, entities: DataFrame) -> DataFrame:
     )
 
 
+def bom_by_name_report(edges: DataFrame, entities: DataFrame) -> DataFrame:
+    """The reference's 4-column bom_by_name file (:1107-1110): names
+    first, then numbers; the *_name_missing flags are internal tally
+    inputs, not part of the report contract."""
+    return bom_by_name(edges, entities).select("parent_name", "child_name", "parent", "child")
+
+
 def bom_name_candidates(edges: DataFrame, entities: DataFrame) -> DataFrame:
     """emit_bom_name_candidates (:1320-1352): the number-based edge list
     annotated with both endpoints' display names (number kept alongside,
@@ -76,8 +83,6 @@ def write_reports(
         f"{out_dir}/resolution_report"
     )
     skip_log(linked).write.mode("overwrite").json(f"{out_dir}/skip_log")
-    # CSV keeps the reference's 4-column shape; the *_name_missing
-    # flags are internal tally inputs, not part of the report contract
-    bom_by_name(edges, entities).select(
-        "parent_name", "child_name", "parent", "child"
-    ).write.mode("overwrite").option("header", True).csv(f"{out_dir}/bom_by_name")
+    bom_by_name_report(edges, entities).write.mode("overwrite").option(
+        "header", True
+    ).csv(f"{out_dir}/bom_by_name")

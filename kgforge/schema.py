@@ -1,27 +1,9 @@
-"""Schemas for the kgforge pipeline.
-
-The primary input is a transcripts table with the exact shape from
-BASELINE.json ``input_hint``; everything else is derived. Mirrors the
-reference's stringly-typed data model (SURVEY.md §1.2;
-/root/reference/src/utils/spreadsheet_loader.py:54-111).
-"""
+"""The canonical entity schema and the RDF vocabulary, mirroring the
+reference's stringly-typed data model (SURVEY.md §1.2)."""
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# input_hint: (conv_id:string, turn_idx:int32, role:string, text:string,
-#              tool:string, ts:timestamp)
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)
 
 # Canonical entity table — the reference's parts dict
 # (spreadsheet_loader.py:54-111): one flat row per normalized number.
@@ -36,39 +18,6 @@ ENTITY_SCHEMA = T.StructType(
         T.StructField("revision", T.StringType(), True),
         T.StructField("container", T.StringType(), True),
         T.StructField("part_type", T.StringType(), True),
-    ]
-)
-
-# Extracted mention rows (one turn -> many mentions), before linking.
-MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("slot", T.StringType(), False),  # 'ref' | 'parent'
-        T.StructField("mention", T.StringType(), False),
-    ]
-)
-
-# Triple rows — the reference's rdflib tuples (spreadsheet_loader.py:878-917)
-# flattened: obj_is_literal preserves the URIRef-vs-Literal split that
-# changes N-Triples serialization (SURVEY.md §1.2).
-TRIPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("obj_is_literal", T.BooleanType(), False),
-    ]
-)
-
-# Per-partition checkpoint manifest (resume.py) — the Spark analogue of the
-# reference's idempotent MERGE batches (neo4j path :613-626).
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_triples", T.LongType(), False),
-        T.StructField("lineage", T.StringType(), True),
-        T.StructField("committed_at", T.StringType(), False),
     ]
 )
 

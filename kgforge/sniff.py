@@ -17,7 +17,7 @@ Here the same normalization runs on a raw cell grid (list of rows) on
 the driver — sniffing is inherently per-sheet, header-region-sized work;
 the *data* then enters Spark via ``createDataFrame`` (or, at scale, the
 sniffed schema parameterizes a distributed CSV read with an explicit
-schema). The fixture generator uses this to emulate messy inputs while
+schema). The tests use this to emulate messy exports while
 every downstream operator keeps its fixed-schema contract.
 """
 

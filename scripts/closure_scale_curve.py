@@ -2,9 +2,10 @@
 and 10x input, so the "right plan at 100x" claim for the suite's most
 expensive stage rests on a recorded curve, not extrapolation.
 
-Input: the sf0.1 fixture BOM edge set (the bench's closure stage uses
-its mod-20 subgraph; here the FULL edge set is the 1x point). Two 10x
-shapes probe the two ways a corpus grows:
+Input: the mod-20 subgraph of the sf0.1 fixture BOM edge set, the
+long-chain, low-density subgraph the bench's closure stage uses; that
+subgraph is the 1x point. Two 10x shapes probe the two ways a corpus
+grows:
 
 - breadth 10x: ten disjoint prefix-renamed copies — component count
   grows 10x, diameter unchanged. Delta path-doubling's round count must
@@ -12,8 +13,8 @@ shapes probe the two ways a corpus grows:
   wider but the same depth).
 - depth 10x: ten copies chained root-under-leaf — diameter ~10x.
   Doubling's rounds must grow by ~log2(10) ≈ +3-4, NOT 10x (the
-  semi-naive form pays 10x the rounds here, which is why doubling is
-  the default).
+  semi-naive form pays 10x the rounds here, which is why the sampled
+  closure uses doubling; on the full, dense edge set semi-naive wins).
 
 Usage: python scripts/closure_scale_curve.py [sf_dir] [out_json]
 Writes one JSON blob (per-shape: edges, pairs, rounds, delta sizes,

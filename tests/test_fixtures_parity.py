@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from kgforge import fixtures
 from kgforge.oracle import with_fixtures
-from tests.util import assert_df_matches_oracle
+from tests.util import assert_df_matches_oracle, load_entities_raw_messy
 
 
 def test_transcripts_parity(spark, sf_dir):
@@ -136,7 +136,7 @@ def test_messy_export_roundtrip_matches_clean_fixture(spark, sf_dir):
     from kgforge.normalize import truncate_number_col
 
     clean = fixtures.load_entities_raw(spark, sf_dir)
-    messy = fixtures.load_entities_raw_messy(spark, sf_dir)
+    messy = load_entities_raw_messy(spark, sf_dir)
     cols = ["sheet_idx", *ENTITY_COL_ORDER]
     assert sorted(map(tuple, clean.select(cols).collect())) == sorted(
         map(tuple, messy.select(cols).collect())

@@ -516,6 +516,35 @@ def test_cli_report_flags(sf_dir, tmp_path):
     )
 
 
+def test_write_reports_writes_each_report(spark, sf_dir, tmp_path):
+    """reports.write_reports (K3/K4): each file it writes reads back as
+    exactly the DataFrame it came from, and bom_by_name keeps the
+    reference's 4-column shape."""
+    from kgforge import reports
+
+    ents = fixtures.load_entities(spark, sf_dir)
+    linked = linking.link_mentions(
+        extract.extract_mentions(fixtures.load_transcripts(spark, sf_dir)), ents
+    ).cache()
+    edges = graph.bom_edges_from_linked(linked)
+    out = str(tmp_path / "reports")
+    reports.write_reports(linked, ents, edges, out)
+
+    written = {
+        "name_index": (reports.name_index_report(ents), "csv"),
+        "resolution_report": (reports.resolution_report(linked), "csv"),
+        "skip_log": (reports.skip_log(linked), "json"),
+        "bom_by_name": (reports.bom_by_name_report(edges, ents), "csv"),
+    }
+    for name, (want, fmt) in written.items():
+        reader = spark.read.schema(want.schema)
+        got = (reader.option("header", True).csv if fmt == "csv" else reader.json)(f"{out}/{name}")
+        assert got.count() == want.count() > 0, name
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, name
+    assert written["bom_by_name"][0].columns == ["parent_name", "child_name", "parent", "child"]
+    linked.unpersist()
+
+
 def test_spark_submit_pyfiles_lifecycle(tmp_path):
     """North-rule lifecycle evidence: package kgforge as a --py-files
     zip and run the pipeline through a real ``spark-submit`` driver from
@@ -661,6 +690,62 @@ def test_connector_cypher_batches_idempotent_under_flaky_transport(spark, sf_dir
             batch_size=5, max_retries=2, base_backoff_s=0.0,
         )
     assert "store unreachable" in str(exc_info.getrepr(chain=True))
+
+
+def test_connector_payloads_and_batch_ids_are_pinned(spark, tmp_path):
+    """Both delivery legs turn a fixed one-partition input into fixed
+    chunks of two: the payload bytes and the content-hash batch ids
+    equal the ones computed here, and the stats keys stay per leg."""
+    import datetime
+    import hashlib
+    import json as _json
+
+    from kgforge import connector
+
+    def recorded(sub: str, deliver) -> tuple[dict, dict]:
+        out = tmp_path / sub
+        out.mkdir()
+        out_s = str(out)
+
+        def recording(payload: bytes, batch_id: str) -> bool:
+            with open(f"{out_s}/{batch_id}", "wb") as f:
+                f.write(payload)
+            return True
+
+        stats = deliver(recording)
+        return stats, {p.name: p.read_bytes() for p in out.iterdir()}
+
+    lines = [f"<urn:part:{i}> <urn:ontology:hasComponent> <urn:part:{i}0> ." for i in (3, 1, 4, 5, 2)]
+    df = spark.createDataFrame([(x,) for x in lines], "line string").coalesce(1)
+    stats, got = recorded("nt", lambda t: connector.deliver_ntriples(df, t, batch_size=2))
+    assert stats == {"chunks_delivered": 3, "lines_delivered": 5, "attempts": 3}
+    assert got == {
+        hashlib.sha256("\n".join(sorted(c)).encode()).hexdigest()[:32]: ("\n".join(c) + "\n").encode()
+        for c in (lines[0:2], lines[2:4], lines[4:])
+    }
+
+    rows = [
+        {"number": f"P-{i}", "qty": i, "ts": datetime.date(2024, 1, i)} for i in (3, 1, 4, 5, 2)
+    ]
+    df = spark.createDataFrame(rows, "number string, qty int, ts date").coalesce(1)
+    stmt = connector.PART_MERGE_STATEMENT
+    stats, got = recorded(
+        "cypher", lambda t: connector.deliver_cypher_batches(df, stmt, t, batch_size=2)
+    )
+    assert stats == {"chunks_delivered": 3, "rows_delivered": 5, "attempts": 3}
+
+    def cypher_chunk(chunk):
+        canon = _json.dumps([stmt, sorted(_json.dumps(r, sort_keys=True, default=str) for r in chunk)])
+        payload = _json.dumps(
+            {"statement": stmt, "parameters": {"rows": chunk}},
+            sort_keys=True, separators=(",", ":"), default=str,
+        )
+        return hashlib.sha256(canon.encode()).hexdigest()[:32], payload.encode()
+
+    assert got == dict(cypher_chunk(c) for c in (rows[0:2], rows[2:4], rows[4:]))
+    assert got[cypher_chunk(rows[4:])[0]].startswith(
+        b'{"parameters":{"rows":[{"number":"P-2","qty":2,"ts":"2024-01-02"}]}'
+    )
 
 
 def test_http_ntriples_transport_against_local_server(spark, sf_dir):
