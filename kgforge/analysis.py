@@ -39,7 +39,7 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge import sniff, xlsx
+from kgforge import sources, xlsx
 
 ANALYSIS_SHEETS: tuple[str, ...] = (
     "MechanicalPart-Sheet",
@@ -68,7 +68,7 @@ def bom_name_summary(spark: SparkSession, path: str, top_n: int = 10) -> dict:
     appearance, so tests compare the count VALUES per named parent, not
     the ordering). Returns the shipped JSON's shape."""
     df = spark.read.option("header", True).csv(path)
-    pair = sniff.resolve_name_pair_columns(df.columns)
+    pair = sources.resolve_name_pair_columns(df.columns)
     if pair is None:
         raise ValueError(f"no name-pair columns in header {df.columns}")
     p_col, c_col = pair

@@ -1,23 +1,23 @@
-"""Canonicalization: stable IRI assignment via connected components
-(the north-rule pass: cluster equivalent entities, name each cluster by
-its minimum member, derive the canonical IRI from that representative).
+"""Canonicalization: stable IRI assignment (the north-rule pass: cluster
+equivalent entities, name each cluster by its minimum member, derive
+the canonical IRI from that representative).
 
 Equivalence here is the reference's same-display-name relation (the
 SUPERSEDES self-join J5, snowmobile_neo4j_importer.py:250-264): two
 numbers sharing a name are the same logical part across revisions. The
-clustering runs as a distributed min-label-propagation fixpoint
-(graph.connected_components) so it generalizes to any equivalence edge
-set (e.g. alternate links, fuzzy-match edges) — for the pure same-name
-relation the result provably equals min(number) per name group, which
-is what the DuckDB oracle checks.
+clusters of that relation are the name groups themselves, so the
+representative is one window aggregate, ``min(number)`` per name — the
+expression the DuckDB oracle checks. :func:`equivalence_edges` gives the
+same relation as a star edge set for the general connected-components
+pass (graph.connected_components), whose components on these edges are
+exactly the name groups.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgforge import graph
 from kgforge.normalize import iri_encode_col
 from kgforge.schema import PART_NS
 
@@ -29,8 +29,7 @@ def equivalence_edges(entities: DataFrame) -> DataFrame:
     components as the O(k²) all-pairs clique — with Zipfian-hot names
     (thousands of entities sharing one display name at corpus scale) the
     clique's pair explosion is quadratic in group size while the star
-    stays linear. The CC machinery downstream is unchanged and still
-    accepts arbitrary extra edge sets (alternate links, fuzzy matches).
+    stays linear.
     """
     reps = entities.groupBy("name").agg(F.min("number").alias("parent"))
     return (
@@ -43,13 +42,15 @@ def equivalence_edges(entities: DataFrame) -> DataFrame:
 
 
 def assign_canonical_iris(entities: DataFrame) -> DataFrame:
-    """entities + (canonical_number, canonical_iri): cluster
-    representative = min number in the connected component of the
-    equivalence graph; singletons represent themselves."""
-    comps = graph.connected_components(equivalence_edges(entities))
-    out = entities.join(comps, entities.number == comps.node, "left").select(
-        entities["*"],
-        F.coalesce(F.col("component"), F.col("number")).alias("canonical_number"),
+    """entities (keyed by number) + (canonical_number, canonical_iri):
+    the representative is the minimum number of the row's name group; a
+    row with a null name (or number) groups with nothing and represents
+    itself. One window over ``name``, no job until the caller's action."""
+    group_min = F.min("number").over(Window.partitionBy("name"))
+    out = entities.withColumn(
+        "canonical_number",
+        F.when(F.col("name").isNull() | F.col("number").isNull(), F.col("number"))
+        .otherwise(group_min),
     )
     return out.withColumn(
         "canonical_iri", F.concat(F.lit(PART_NS), iri_encode_col(F.col("canonical_number")))

@@ -459,7 +459,7 @@ def connected_components(
     edges: DataFrame, max_iterations: int = 64, stats: dict | None = None
 ) -> DataFrame:
     """Connected components by iterative min-label propagation over the
-    undirected graph — the canonicalization pass of the north rule
+    undirected graph — the clustering step of near-duplicate dedup
     (stable cluster representative = min member id). Returns
     (node, component).
 

@@ -18,7 +18,7 @@ The reference accepts two CSV shapes and routes by header:
   tests/test_snowmobile_golden.py), so this reader decodes
   hierarchical CSVs with the stack;
 - *simple parent-child* (:172-193): two columns found by synonym
-  priority (:mod:`kgforge.sniff`), normalized, one edge per row.
+  priority (:func:`resolve_edge_columns`), normalized, one edge per row.
 
 Scale strategy: the simple shape is a plain distributed CSV scan. The
 hierarchical shape needs per-file row ORDER, which a split CSV scan does
@@ -35,12 +35,64 @@ inside quoted cells are not supported in the hierarchical shape
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kgforge import graph, sniff
+from kgforge import graph, xlsx
 from kgforge.normalize import normalize_number_col
+
+# Priority-ordered synonym lists for the simple parent-child edge shape
+# (reference :1185-1186). Matching is case-insensitive on stripped names.
+PARENT_COLUMN_SYNONYMS = ("parent number", "parent", "number", "parent part number")
+CHILD_COLUMN_SYNONYMS = ("child number", "child", "component id", "child part number")
+
+# Column-pair candidates for the NAME-based BOM shape, in priority order
+# (reference parse_bom_csv_by_name :271-279).
+NAME_PAIR_SYNONYMS = (
+    ("parent name", "child name"),
+    ("name", "component name"),
+    ("name", "component id"),
+)
+
+
+def _cell(v) -> str:
+    """A header cell's stripped text; '' for an empty cell."""
+    return "" if v is None else str(v).strip()
+
+
+def resolve_edge_columns(columns: Sequence[str]) -> tuple[str, str] | None:
+    """Pick the (parent, child) column pair from an edge CSV header by
+    synonym priority (reference :1185-1195). Returns the ORIGINAL column
+    names, or None when either side is missing (caller falls back to the
+    hierarchical level-stack shape, as the reference does)."""
+    by_lower = {}
+    for c in columns:
+        by_lower.setdefault(_cell(c).lower(), c)
+    parent = next((by_lower[s] for s in PARENT_COLUMN_SYNONYMS if s in by_lower), None)
+    child = next((by_lower[s] for s in CHILD_COLUMN_SYNONYMS if s in by_lower), None)
+    if parent is None or child is None:
+        return None
+    if parent == child:
+        # 'number' can satisfy the parent list while 'child' names the
+        # child side; a single column can't be both ends
+        return None
+    return parent, child
+
+
+def resolve_name_pair_columns(columns: Sequence[str]) -> tuple[str, str] | None:
+    """Pick the (parent-name, child-name) column pair for the NAME-based
+    BOM shape (reference parse_bom_csv_by_name :271-279): first synonym
+    PAIR fully present wins; original casing returned."""
+    by_lower = {}
+    for c in columns:
+        by_lower.setdefault(_cell(c).lower(), c)
+    for p, c in NAME_PAIR_SYNONYMS:
+        if p in by_lower and c in by_lower:
+            return by_lower[p], by_lower[c]
+    return None
 
 
 def read_bom_csv(
@@ -77,7 +129,7 @@ def read_bom_csv(
             raise ValueError(f"unknown hierarchical_mode {hierarchical_mode!r}")
         return _decode_levels(levels).dropDuplicates()
 
-    pair = sniff.resolve_edge_columns(columns)
+    pair = resolve_edge_columns(columns)
     if pair is None:
         raise ValueError(
             f"no BOM shape in header {columns}: need Number+Level or a "
@@ -177,11 +229,11 @@ def read_bom_csv_by_name(
     from kgforge import linking
 
     df = spark.read.option("header", True).csv(path)
-    pair_cols = sniff.resolve_name_pair_columns(df.columns)
+    pair_cols = resolve_name_pair_columns(df.columns)
     if pair_cols is None:
         raise ValueError(
             f"no name-based BOM shape in header {df.columns}: need one of "
-            f"{sniff.NAME_PAIR_SYNONYMS}"
+            f"{NAME_PAIR_SYNONYMS}"
         )
     p_col, c_col = pair_cols
     # reference drops a duplicated header row that leaked into the data
@@ -289,18 +341,72 @@ def _cell_str(v) -> str | None:
     return str(v)
 
 
-def _excel_tables(path: str, sheets: list[str] | None):
-    from kgforge import xlsx
+_PARTS_HEADER = {"Number", "Name"}
+_PARTS_COLUMNS = ("Number", "Name", "Type", "Source", "View", "State", "Revision", "Container")
 
+
+def _cells(t: xlsx.Table, row: list, columns: Sequence[str]) -> tuple:
+    """``row``'s cells under ``columns`` as reference strings; a column
+    the sheet lacks reads as None."""
+    return tuple(_cell_str(t.get(row, c)) for c in columns)
+
+
+def _workbook_grids(path: str, sheets: list[str] | None):
+    """One driver-side parse of the workbook: ``(sheet_name, grid)``
+    for the requested sheets (all, in workbook order, by default);
+    absent sheets are skipped."""
     wb = xlsx.read_workbook(path)
     for name in sheets or list(wb):
-        grid = wb.get(name)
-        if grid is None:
-            continue
-        t = xlsx.Table(grid, skiprows=4)
-        if t.empty or not t.columns:
-            t = xlsx.Table(grid, skiprows=0)
-        yield name, t
+        if name in wb:
+            yield name, wb[name]
+
+
+def _frame(grid: list[list]) -> xlsx.Table:
+    """The reference's sheet framing (spreadsheet_loader.py:59-61):
+    read with ``skiprows=4`` and fall back to the top of the sheet when
+    that leaves no data row."""
+    t = xlsx.Table(grid, skiprows=4)
+    if t.empty or not t.columns:
+        t = xlsx.Table(grid, skiprows=0)
+    return t
+
+
+def _parts_table(grid: list[list], sniffed: bool = False) -> xlsx.Table | None:
+    """One parts sheet framed as ``parse_parts`` reads it (:59-75): the
+    first data row is promoted to the header when it holds Number+Name
+    and the header does not (:64-70); None when no Number+Name header
+    is found, i.e. the sheet is skipped. ``sniffed`` adds the
+    header-anywhere rescue on the same grid."""
+    t = _frame(grid)
+    if t.rows:
+        first_str = set(map(str, t.first_row_values()))
+        if _PARTS_HEADER <= first_str and not _PARTS_HEADER <= set(t.columns):
+            t = t.promote_first_row_header()
+    if _PARTS_HEADER <= set(t.columns):
+        return t
+    if not sniffed:
+        return None
+    # header-anywhere scan: the first row carrying the required headers
+    # (the reference's change importer uses the same idea,
+    # helicopter_change_importer.py:192-196)
+    idx = next(
+        (i for i, row in enumerate(grid) if _PARTS_HEADER <= {_cell(c) for c in row}), None
+    )
+    if idx is None:
+        return None
+    t = xlsx.Table(grid[idx:], skiprows=0)
+    # mirror-drop against the RAW header row (Table mangles duplicate
+    # names, so the mangled columns never compare equal to a literal
+    # header-duplicate row)
+    width = len(t.columns)
+    raw_header = [
+        "" if v is None else str(v) for v in (list(grid[idx]) + [None] * width)[:width]
+    ]
+    while t.rows and [
+        "" if v is None else str(v) for v in t.first_row_values()
+    ] == raw_header:
+        t.rows = t.rows[1:]
+    return t
 
 
 def read_excel_parts(
@@ -320,77 +426,25 @@ def read_excel_parts(
     Faithfully keeps the reference's quirk that an unpromoted duplicated
     header row becomes a part numbered 'Number' — the published
     Snowmobile count of 939 parts includes it (docs/GRAPHDB_QUERIES.md:6
-    vs 938 real parts; pinned by tests/test_snowmobile_golden.py).
+    vs 938 real parts; pinned by tests/test_snowmobile_golden.py and
+    tests/test_workbook_sources.py).
 
     ``sniffed=True`` additionally recovers sheets the reference's fixed
     ``skiprows=4`` read CANNOT parse (header at any other row — e.g.
     Helicopter_Import.xlsx's header-at-row-0 export, which its loader
     silently skips): when the standard path finds no Number+Name
-    header, the grid is re-scanned for the first row carrying the
-    required headers (:func:`kgforge.sniff.find_header_row`) and
-    leading rows that merely mirror that header are dropped instead of
-    becoming artifact parts.
+    header, the same parsed grid is scanned for the first row carrying
+    the required headers, and leading rows that merely mirror that
+    header are dropped instead of becoming artifact parts.
     """
-    from kgforge import sniff as _sniff
-    from kgforge import xlsx as _xlsx
-
-    # loaded only if a sheet actually needs the header-anywhere rescue
-    # (avoids a second driver-side workbook parse on the standard path)
-    wb_grids: dict | None = None
     rows: list[tuple] = []
-    seq = 0
-    for sheet_name, t in _excel_tables(path, sheets):
-        if t.rows:
-            first_str = set(map(str, t.first_row_values()))
-            req = {"Number", "Name"}
-            if req.issubset(first_str) and not req.issubset(set(map(str, t.columns))):
-                t = t.promote_first_row_header()
-        if not {"Number", "Name"}.issubset(set(map(str, t.columns))):
-            if not sniffed:
-                continue
-            if wb_grids is None:
-                wb_grids = _xlsx.read_workbook(path)
-            grid = wb_grids.get(sheet_name) or []
-            idx = _sniff.find_header_row(grid)
-            if idx is None:
-                continue
-            from kgforge.xlsx import Table as _Table
-
-            t = _Table(grid[idx:], skiprows=0)
-            # mirror-drop against the RAW header row (Table mangles
-            # duplicate names, so the mangled columns never compare
-            # equal to a literal header-duplicate row)
-            width = len(t.columns)
-            raw_header = [
-                "" if v is None else str(v)
-                for v in (list(grid[idx]) + [None] * width)[:width]
-            ]
-            while t.rows and [
-                "" if v is None else str(v) for v in t.first_row_values()
-            ] == raw_header:
-                t.rows = t.rows[1:]
+    for sheet_name, grid in _workbook_grids(path, sheets):
+        t = _parts_table(grid, sniffed)
+        if t is None:
+            continue
         part_type = next((tok for tok in _PART_TYPE_TOKENS if tok in sheet_name), None)
-        present = set(t.columns)
-
         for r in t.rows:
-            def cell(col: str):
-                return _cell_str(t.get(r, col)) if col in present else None
-
-            seq += 1
-            rows.append(
-                (
-                    seq,
-                    cell("Number"),
-                    cell("Name"),
-                    cell("Type"),
-                    cell("Source"),
-                    cell("View"),
-                    cell("State"),
-                    cell("Revision"),
-                    cell("Container"),
-                    part_type,
-                )
-            )
+            rows.append((len(rows), *_cells(t, r, _PARTS_COLUMNS), part_type))
     # the workbook rows are materialized driver-side by design — parts
     # catalogs are DIMENSION inputs (thousands of rows). Guard the
     # assumption: someone pointing this at a multi-million-row export
@@ -426,7 +480,8 @@ def read_excel_bom_levels(
     level-stack decode. Feed to :func:`kgforge.graph.level_stack_decode`
     (one sheet = one ordered group)."""
     rows: list[tuple] = []
-    for sheet_name, t in _excel_tables(path, sheets):
+    for sheet_name, grid in _workbook_grids(path, sheets):
+        t = _frame(grid)
         if t.rows:
             first = t.first_row_values()
             if "Action" in str(first) or set(map(str, first)) == set(map(str, t.columns)):
@@ -434,15 +489,9 @@ def read_excel_bom_levels(
         lower = {str(c).strip().lower(): c for c in t.columns}
         if "number" not in lower or "level" not in lower:
             continue
+        level_number = (lower["level"], lower["number"])
         for idx, r in enumerate(t.rows):
-            rows.append(
-                (
-                    sheet_name,
-                    idx,
-                    _cell_str(t.get(r, lower["level"])),
-                    _cell_str(t.get(r, lower["number"])),
-                )
-            )
+            rows.append((sheet_name, idx, *_cells(t, r, level_number)))
     df = spark.createDataFrame(
         rows, "group_id string, row_idx bigint, level_raw string, number string"
     )
@@ -468,6 +517,25 @@ def read_excel_bom_edges(
     return _decode_levels(read_excel_bom_levels(spark, path, sheets)).dropDuplicates()
 
 
+def _link_sheet(
+    spark: SparkSession, path: str, sheet: str, columns: tuple[str, ...], schema: str
+) -> DataFrame | None:
+    """One link sheet (parse_alternate_links / parse_describe_links):
+    the framed sheet with its 'Action' row promoted to the header, read
+    into ``schema`` as the cells of ``columns`` (an absent column reads
+    as null). None when the sheet is absent or lacks either of the
+    first two columns, which are required."""
+    grid = xlsx.read_workbook(path).get(sheet)
+    if grid is None:
+        return None
+    t = _frame(grid)
+    if t.rows and "Action" in str(t.first_row_values()):
+        t = t.promote_first_row_header()
+    if not set(columns[:2]) <= set(t.columns):
+        return None
+    return spark.createDataFrame([_cells(t, r, columns) for r in t.rows], schema)
+
+
 def read_excel_alternates(
     spark: SparkSession, path: str, sheet: str = "WTPartAlternateLink-Sheet"
 ) -> DataFrame:
@@ -475,43 +543,23 @@ def read_excel_alternates(
     skiprows-4 read of the link sheet, 'Action'-row header promotion,
     Child/Replacement part number columns required (else empty result),
     missing replacement_type defaults to 'alternate'."""
-    empty = spark.createDataFrame(
-        [], "child_number string, replacement_number string, replacement_type string"
+    schema = "child_number string, replacement_number string, replacement_type string"
+    df = _link_sheet(
+        spark, path, sheet,
+        ("Child Part Number", "Replacement Part Number", "Replacement Type"), schema,
     )
-    for name, t in _excel_tables(path, [sheet]):
-        if t.rows and "Action" in str(t.first_row_values()):
-            t = t.promote_first_row_header()
-        if (
-            "Child Part Number" not in t.columns
-            or "Replacement Part Number" not in t.columns
-        ):
-            return empty
-        has_type = "Replacement Type" in t.columns
-        rows = [
-            (
-                _cell_str(t.get(r, "Child Part Number")),
-                _cell_str(t.get(r, "Replacement Part Number")),
-                (_cell_str(t.get(r, "Replacement Type")) if has_type else None),
-            )
-            for r in t.rows
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "child_number string, replacement_number string, replacement_type string",
+    if df is None:
+        return spark.createDataFrame([], schema)
+    return (
+        df.select(
+            normalize_number_col(F.col("child_number")).alias("child_number"),
+            normalize_number_col(F.col("replacement_number")).alias("replacement_number"),
+            F.coalesce(F.trim(F.col("replacement_type")), F.lit("alternate")).alias(
+                "replacement_type"
+            ),
         )
-        return (
-            df.select(
-                normalize_number_col(F.col("child_number")).alias("child_number"),
-                normalize_number_col(F.col("replacement_number")).alias(
-                    "replacement_number"
-                ),
-                F.coalesce(F.trim(F.col("replacement_type")), F.lit("alternate")).alias(
-                    "replacement_type"
-                ),
-            )
-            .filter((F.col("child_number") != "") & (F.col("replacement_number") != ""))
-        )
-    return empty
+        .filter((F.col("child_number") != "") & (F.col("replacement_number") != ""))
+    )
 
 
 def read_excel_describe_links(
@@ -523,39 +571,24 @@ def read_excel_describe_links(
         "document_number string, part_number string, document_revision string, "
         "document_org string, document_container string"
     )
-    empty = spark.createDataFrame([], schema)
-    for name, t in _excel_tables(path, [sheet]):
-        if t.rows and "Action" in str(t.first_row_values()):
-            t = t.promote_first_row_header()
-        if not {"Document Number", "Part Number"}.issubset(set(t.columns)):
-            return empty
-        present = set(t.columns)
-
-        def cell(r, col):
-            return _cell_str(t.get(r, col)) if col in present else None
-
-        rows = [
-            (
-                cell(r, "Document Number"),
-                cell(r, "Part Number"),
-                cell(r, "Document Revision"),
-                cell(r, "Document Owning Organization"),
-                cell(r, "Document Container"),
-            )
-            for r in t.rows
-        ]
-        df = spark.createDataFrame(rows, schema)
-        return (
-            df.select(
-                normalize_number_col(F.col("document_number")).alias("document_number"),
-                normalize_number_col(F.col("part_number")).alias("part_number"),
-                F.trim(F.col("document_revision")).alias("document_revision"),
-                F.trim(F.col("document_org")).alias("document_org"),
-                F.trim(F.col("document_container")).alias("document_container"),
-            )
-            .filter((F.col("document_number") != "") & (F.col("part_number") != ""))
+    df = _link_sheet(
+        spark, path, sheet,
+        ("Document Number", "Part Number", "Document Revision",
+         "Document Owning Organization", "Document Container"),
+        schema,
+    )
+    if df is None:
+        return spark.createDataFrame([], schema)
+    return (
+        df.select(
+            normalize_number_col(F.col("document_number")).alias("document_number"),
+            normalize_number_col(F.col("part_number")).alias("part_number"),
+            F.trim(F.col("document_revision")).alias("document_revision"),
+            F.trim(F.col("document_org")).alias("document_org"),
+            F.trim(F.col("document_container")).alias("document_container"),
         )
-    return empty
+        .filter((F.col("document_number") != "") & (F.col("part_number") != ""))
+    )
 
 
 _CHANGE_KEYWORDS = ("Change", "Revision", "Version", "State")
@@ -585,8 +618,6 @@ def read_excel_changes(
     Returns (change_id, source_sheet, part_number, part_name,
     revision, state).
     """
-    from kgforge import xlsx
-
     # render_dates: temporal exports style change dates as date cells;
     # opt-in ISO rendering (xlsx module docstring) keeps them parseable
     # downstream (normalize date parse, P13) instead of serial floats

@@ -79,49 +79,52 @@ def test_versions_changes_parity(spark, sf_dir):
     )
 
 
-def test_sniff_sheet_quirks():
-    """The three reference read-path quirks (spreadsheet_loader.py:59-68):
-    preamble skip, empty-after-skip fallback, header-dup promotion."""
-    import pytest
-
-    from kgforge import sniff
+def test_parts_sheet_framing_quirks(spark, tmp_path):
+    """The reference's sheet framing (spreadsheet_loader.py:59-75) as
+    read_excel_parts applies it: preamble skip, empty-after-skip
+    fallback, header-dup promotion, and a sheet without the required
+    headers skipped."""
+    from kgforge import sources
+    from tests.util import write_xlsx
 
     data = [["1", "widget"], ["2", "gadget"]]
     header = ["Number", "Name"]
     banner = [["Report", None], [None, None], ["PLM", None], [None, None]]
 
+    def parts(grid):
+        path = write_xlsx(str(tmp_path / f"s{len(list(tmp_path.iterdir()))}.xlsx"), {"Sheet": grid})
+        return sorted((r.number, r.name) for r in sources.read_excel_parts(spark, path).collect())
+
+    want = [tuple(r) for r in data]
     # preamble path
-    cols, rows = sniff.sniff_sheet(banner + [header] + data)
-    assert cols == header and rows == data
+    assert parts(banner + [header] + data) == want
     # tiny sheet: skiprows would eat everything -> fall back to the top
-    cols, rows = sniff.sniff_sheet([header] + data[:1])
-    assert cols == header and rows == data[:1]
+    assert parts([header] + data[:1]) == want[:1]
+    # skiprows leaves a header but no data row -> fall back to the top
+    more = data + [["3", "bolt"], ["4", "nut"]]
+    assert parts([header] + more) == sorted(tuple(r) for r in more)
     # header duplicated into the first data row under a junk header
-    cols, rows = sniff.sniff_sheet(
-        banner + [["Unnamed: 0", "Unnamed: 1"], header] + data
-    )
-    assert cols == header and rows == data
-    # required headers genuinely absent -> loud error
-    with pytest.raises(ValueError, match="required columns"):
-        sniff.sniff_sheet(banner + [["a", "b"]] + data)
+    assert parts(banner + [["Unnamed: 0", "Unnamed: 1"], header] + data) == want
+    # required headers genuinely absent -> the sheet is skipped
+    assert parts(banner + [["a", "b"]] + data) == []
 
 
 def test_resolve_edge_columns_synonyms():
     """Synonym priority for the simple parent-child edge shape
     (spreadsheet_loader.py:1185-1195): first match per priority list,
     case-insensitive, original casing returned; missing side -> None."""
-    from kgforge import sniff
+    from kgforge import sources
 
-    assert sniff.resolve_edge_columns(["Parent Number", "Child Number", "Qty"]) == (
+    assert sources.resolve_edge_columns(["Parent Number", "Child Number", "Qty"]) == (
         "Parent Number", "Child Number",
     )
     # 'parent' outranks 'number'; 'component id' serves as child
-    assert sniff.resolve_edge_columns(["Number", "Parent", "Component ID"]) == (
+    assert sources.resolve_edge_columns(["Number", "Parent", "Component ID"]) == (
         "Parent", "Component ID",
     )
-    assert sniff.resolve_edge_columns(["Parent", "Qty"]) is None
+    assert sources.resolve_edge_columns(["Parent", "Qty"]) is None
     # one column cannot be both ends
-    assert sniff.resolve_edge_columns(["Child", "Qty", "child number"]) is None
+    assert sources.resolve_edge_columns(["Child", "Qty", "child number"]) is None
 
 
 def test_messy_export_roundtrip_matches_clean_fixture(spark, sf_dir):

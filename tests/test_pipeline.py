@@ -190,14 +190,37 @@ def test_equivalence_edges_star_is_linear_in_group_size(spark):
     k = 400
     rows = [(f"{10_000 + i}", "hot part") for i in range(k)]
     rows += [(f"{i}", f"unique {i}") for i in range(5)]
+    # null names never group; empty names group like any other name
+    rows += [("n2", None), ("n1", None), ("e2", ""), ("e1", "")]
     ents = spark.createDataFrame(rows, "number string, name string")
     edges = canonicalize.equivalence_edges(ents)
-    assert edges.count() == k - 1  # star, not clique (clique would be ~80k)
-    assert edges.filter(F.col("parent") != "10000").count() == 0
+    hot = edges.filter(F.col("child").startswith("1"))
+    assert hot.count() == k - 1  # star, not clique (clique would be ~80k)
+    assert hot.filter(F.col("parent") != "10000").count() == 0
+    assert {tuple(r) for r in edges.subtract(hot).collect()} == {("e1", "e2")}
     canon = canonicalize.assign_canonical_iris(ents)
     got = {r.number: r.canonical_number for r in canon.collect()}
+    assert len(got) == len(rows)
     assert all(got[f"{10_000 + i}"] == "10000" for i in range(k))
     assert all(got[f"{i}"] == f"{i}" for i in range(5))  # singletons self-represent
+    assert (got["n1"], got["n2"], got["e1"], got["e2"]) == ("n1", "n2", "e1", "e1")
+
+
+def test_assign_canonical_iris_starts_no_job(spark):
+    """Canonical IRIs are one window over the name groups: building the
+    frame runs nothing until the caller's own action."""
+    from kgforge import canonicalize
+
+    ents = spark.createDataFrame(
+        [("2", "a"), ("1", "a"), ("3", "b"), ("4", None)], "number string, name string"
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    canon = canonicalize.assign_canonical_iris(ents)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert {r.number: r.canonical_number for r in canon.collect()} == {
+        "1": "1", "2": "1", "3": "3", "4": "4",
+    }
 
 
 def test_cc_label_propagation_on_long_chain(spark):

@@ -42,7 +42,6 @@ LIBRARY_ONLY = {
     "normalize.normalize_part_number_py": "test oracle",
     "reports.write_reports": "K4",
     "resume.read_triples": "K2",
-    "sniff.sniff_sheet": "S1",
     "sources.change_affects_links": "S9",
     "sources.read_api_pages": "S9",
     "sources.read_excel_changes": "S9",

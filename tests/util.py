@@ -226,17 +226,16 @@ def load_entities_raw_messy(spark, sf_dir: str):
     banner preamble on sheet 0 (the skiprows path,
     spreadsheet_loader.py:59-61) and, on sheet 1, a junk header row with
     the real header landing in the first data row (the header-dup
-    repair :62-68) — then recover the table through
-    :func:`kgforge.sniff.sniff_sheet`.
+    repair :62-68) — then recover the table through the parts
+    reader's own sheet framing (``sources._parts_table``, the step
+    :func:`kgforge.sources.read_excel_parts` applies to every sheet).
 
-    Driver-side by design: sniffing is per-sheet, header-region-sized
-    work. At scale the sniffed header parameterizes a distributed read
-    with an explicit schema; only this emulation materializes whole
-    sheets on the driver (fixture sizes only). ``row_idx`` is the row's
+    Driver-side by design, like the workbook readers: whole sheets are
+    materialized on the driver (fixture sizes only). ``row_idx`` is the row's
     position within its sheet — relative order matches
     :func:`kgforge.fixtures.load_entities_raw`, so the last-wins dedup
     elects identical winners."""
-    from kgforge import fixtures, sniff
+    from kgforge import fixtures, sources
 
     raw = fixtures.load_entities_raw(spark, sf_dir).orderBy("sheet_idx", "row_idx").collect()
     excel_cols = list(_EXCEL_HEADERS)
@@ -266,11 +265,10 @@ def load_entities_raw_messy(spark, sf_dir: str):
 
     out = None
     for sheet_idx, grid in sorted(grids.items()):
-        cols, rows = sniff.sniff_sheet(grid)
-        idx = {c: cols.index(c) for c in excel_cols}
+        t = sources._parts_table(grid)
         data = [
-            [sheet_idx, i] + [row[idx[c]] for c in excel_cols]
-            for i, row in enumerate(rows)
+            [sheet_idx, i] + [t.get(row, c) for c in excel_cols]
+            for i, row in enumerate(t.rows)
         ]
         df = spark.createDataFrame(data, _MESSY_SCHEMA)
         out = df if out is None else out.unionByName(df)
