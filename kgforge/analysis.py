@@ -99,7 +99,7 @@ def _pandas_style_tables(
     the reference analysis script's pandas-default framing (module
     docstring). Body cells keep their native type — string filters must
     treat non-strings as never-matching (pandas ``.str`` + na=False)."""
-    wb = xlsx.read_workbook(path)
+    wb = xlsx.read_workbook(path, sheets=sheets)
     for s in sheets:
         grid = wb.get(s)
         if not grid:

@@ -74,10 +74,10 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy(conv_id, turn_idx)) reuse instead of re-shuffling the
     # mention rows (guide §2.4: two operations keyed the same way share
     # one exchange). Net: one corpus shuffle where there were two.
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # No width is given, so AQE coalesces it to the data's size.
     li = li.withColumn(
         "conv_id", F.concat(F.lit("conv-"), F.col("l_orderkey").cast("string"))
-    ).repartition(target, "conv_id")
+    ).repartition("conv_id")
     w_turn = Window.partitionBy("conv_id").orderBy("l_linenumber", "l_partkey", "l_suppkey")
     base = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)

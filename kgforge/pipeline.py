@@ -30,6 +30,7 @@ class GraphBuild:
     entities: DataFrame
     linked: DataFrame
     edges: DataFrame
+    n_edges: int
     closure: DataFrame
     triples: DataFrame
 
@@ -91,13 +92,16 @@ def build_graph(
     if strict:
         linking.check_strict(linked)
     # edges feed four downstream families -> cache once (SURVEY §4.3
-    # exchange-reuse: all triple families derive from the same edges).
+    # exchange-reuse: all triple families derive from the same edges),
+    # filled here by the one count, so its layout is the session's
+    # (AQE-coalesced) and not that of a closure loop's scoped confs
     edges = graph.bom_edges_from_linked(linked)
     if extra_edges is not None:
         edges = edges.unionByName(
             extra_edges.select("parent", "child")
         ).dropDuplicates()
     edges = edges.cache()
+    n_edges = edges.count()
 
     if closure_edge_mod:
         # sampled subgraph: long chains, low density -> delta doubling
@@ -122,7 +126,7 @@ def build_graph(
         entities, edges, closure, alt, desc,
         materialize.canonical_equivalence_triples(canon),
     )
-    return GraphBuild(transcripts, entities, linked, edges, closure, triples)
+    return GraphBuild(transcripts, entities, linked, edges, n_edges, closure, triples)
 
 
 def run_pipeline(
@@ -146,7 +150,7 @@ def run_pipeline(
     )
     stats = {
         **_materialize(build.triples, out_dir, lineage=f"sf_dir={sf_dir};strategy={strategy}"),
-        "n_edges": build.edges.count(),
+        "n_edges": build.n_edges,
     }
     build.edges.unpersist()
     return stats

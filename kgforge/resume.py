@@ -11,12 +11,16 @@ ids, row counts, lineage — is committed atomically (tmp + rename) after
 each group. Resume = anti-set of bucket ids vs the manifest.
 
 Layout: :func:`bucket_by_subject` runs ONE exchange on the bucket id
-(``repartition(n_buckets, "subj_bucket")``), so every bucket's rows sit
-in a single partition and each ``triples/subj_bucket=<b>/`` directory
-gets exactly one parquet file. The caller caches that frame and owns
-its lifetime (``pipeline._materialize``); the manifest row counts of
-every bucket come from one ``n_buckets``-task aggregate over it, taken
-before the first group is written.
+(``repartition("subj_bucket")``), so every bucket's rows sit in a
+single partition and each ``triples/subj_bucket=<b>/`` directory gets
+exactly one parquet file. AQE sizes that exchange from the data:
+coalescing merges whole hash partitions and never splits one, so a
+bucket never spans two tasks however few tasks remain, and write
+parallelism follows the data instead of ``n_buckets``. The caller
+caches that frame and owns its lifetime (``pipeline._materialize``);
+the session lets AQE coalesce the cached plan's last stage too
+(``session.py``). The manifest row counts of every bucket come from one
+aggregate over it, taken before the first group is written.
 
 On a cluster this manifest lives in Iceberg snapshot summary properties
 and the write is `MERGE INTO`/replace-partition; the protocol is the
@@ -59,12 +63,15 @@ def _commit_manifest(out_dir: str, manifest: dict) -> None:
 
 def bucket_by_subject(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Add ``subj_bucket = pmod(xxhash64(subj), n_buckets)`` and put
-    each bucket in its own partition, so the one task that writes it
-    emits one file. Write parallelism is therefore ``n_buckets``: at
-    cluster scale the usual bucketed-table trade-off, set by that knob."""
+    each bucket in one partition, so the one task that writes it emits
+    one file. The exchange has no fixed width: AQE coalesces it to the
+    data's size, merging whole buckets into a partition but never
+    splitting one, so write parallelism follows the data (at most
+    ``spark.sql.shuffle.partitions`` tasks) and ``n_buckets`` is only the
+    bucket-id modulus (the number of files and of manifest entries)."""
     return triples.withColumn(
         "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-    ).repartition(n_buckets, "subj_bucket")
+    ).repartition("subj_bucket")
 
 
 class InjectedFailure(RuntimeError):
@@ -98,7 +105,7 @@ def write_triples_resumable(
 
     data_dir = os.path.join(out_dir, "triples")
     # every bucket's manifest count from one aggregate over the cached,
-    # bucket-partitioned frame (n_buckets tasks, no re-scan of the union)
+    # bucket-partitioned frame (no re-scan of the union)
     bucket_counts = {
         r["subj_bucket"]: r["n"]
         for r in triples.groupBy("subj_bucket").agg(F.count("*").alias("n")).collect()

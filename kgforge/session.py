@@ -6,6 +6,17 @@ settings are the ones we would ship to a 1000-executor cluster: AQE on
 (every Python crossing is a columnar batch, never per-row pickle),
 broadcast threshold generous enough to keep the canonical-name
 dictionary on the map side of the linking join.
+
+AQE also sizes the last stage of every cached plan:
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``
+lets it coalesce a ``.cache()``d frame's final exchange like any other,
+so the KG build's edge and bucketed-triple caches are as wide as their
+data, not ``spark.sql.shuffle.partitions``. It is an internal SQLConf
+key (default false in Spark 4.1); under spark-submit pass it as
+``--conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``.
+Spark warns that a query may then need an extra shuffle to read cached
+data; the KG tail and ``curate_corpus`` plans gain none
+(``scripts/dump_plans.py --executed``).
 """
 
 from __future__ import annotations
@@ -52,6 +63,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # ... including the final stage of a cached plan (module docstring)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for every pandas UDF / toPandas crossing.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -354,8 +354,8 @@ def _cells(t: xlsx.Table, row: list, columns: Sequence[str]) -> tuple:
 def _workbook_grids(path: str, sheets: list[str] | None):
     """One driver-side parse of the workbook: ``(sheet_name, grid)``
     for the requested sheets (all, in workbook order, by default);
-    absent sheets are skipped."""
-    wb = xlsx.read_workbook(path)
+    absent sheets are skipped and unrequested ones are not parsed."""
+    wb = xlsx.read_workbook(path, sheets=sheets)
     for name in sheets or list(wb):
         if name in wb:
             yield name, wb[name]
@@ -394,17 +394,16 @@ def _parts_table(grid: list[list], sniffed: bool = False) -> xlsx.Table | None:
     )
     if idx is None:
         return None
-    t = xlsx.Table(grid[idx:], skiprows=0)
-    # mirror-drop against the RAW header row (Table mangles duplicate
+    # frame on the header row as found: its cells stripped, so a padded
+    # " Number " header names the Number column
+    header = [c.strip() if isinstance(c, str) else c for c in grid[idx]]
+    t = xlsx.Table([header, *grid[idx + 1 :]], skiprows=0)
+    # mirror-drop against the header row's cells (Table mangles duplicate
     # names, so the mangled columns never compare equal to a literal
     # header-duplicate row)
     width = len(t.columns)
-    raw_header = [
-        "" if v is None else str(v) for v in (list(grid[idx]) + [None] * width)[:width]
-    ]
-    while t.rows and [
-        "" if v is None else str(v) for v in t.first_row_values()
-    ] == raw_header:
+    head = [_cell(v) for v in (header + [None] * width)[:width]]
+    while t.rows and [_cell(v) for v in t.first_row_values()] == head:
         t.rows = t.rows[1:]
     return t
 
@@ -525,7 +524,7 @@ def _link_sheet(
     into ``schema`` as the cells of ``columns`` (an absent column reads
     as null). None when the sheet is absent or lacks either of the
     first two columns, which are required."""
-    grid = xlsx.read_workbook(path).get(sheet)
+    grid = xlsx.read_workbook(path, sheets=[sheet]).get(sheet)
     if grid is None:
         return None
     t = _frame(grid)

@@ -31,7 +31,7 @@ import datetime as _dt
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Dict, List, Optional, Tuple
+from typing import Collection, Dict, List, Optional, Tuple
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _RNS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -218,13 +218,16 @@ def _sheet_grid(
     return grid
 
 
-def read_workbook(path: str, render_dates: bool = False) -> Dict[str, List[List]]:
+def read_workbook(
+    path: str, render_dates: bool = False, sheets: Optional[Collection[str]] = None
+) -> Dict[str, List[List]]:
     """Read every sheet of an .xlsx into {sheet_name: grid-of-values}.
 
     Grid cells are str / float / bool / None; rows are padded to the sheet's
     max used width.  Sheet order follows the workbook's declared order.
     ``render_dates=True`` renders date-styled numeric cells as ISO strings
-    (module docstring) instead of raw serial floats.
+    (module docstring) instead of raw serial floats.  ``sheets`` limits the
+    result to the named sheets: the XML of every other sheet is not parsed.
     """
     with zipfile.ZipFile(path) as zf:
         shared = _load_shared_strings(zf)
@@ -244,6 +247,8 @@ def read_workbook(path: str, render_dates: bool = False) -> Dict[str, List[List]
         sheets_el = wb_root.find(_NS + "sheets")
         for sheet in sheets_el.findall(_NS + "sheet"):
             name = sheet.get("name", "")
+            if sheets is not None and name not in sheets:
+                continue
             rid = sheet.get(_RNS + "id")
             member = rel_target.get(rid or "", "")
             out[name] = (

@@ -4,20 +4,36 @@ salted skew join, pushdown/pruning into the parquet scan, shuffle-free
 direct edge assembly, bucketed ANN with no cartesian product).
 
 Run: python scripts/dump_plans.py [sf_dir] (default sf0.001).
+
+``--executed OUT_DIR KG_DIR DOCS_DIR`` instead records the final
+(post-AQE) physical plan of every query that ``run_pipeline`` (over
+``KG_DIR``, the ``%20`` closure sample) and ``curate_corpus`` (over
+``DOCS_DIR/documents.parquet``, the perfbench ``curate_docs`` arguments)
+execute, one file per query under ``OUT_DIR``, and prints per query its
+Exchange count and the Exchanges whose map stage reads a cached
+relation (``InMemoryTableScan``). Run it on two checkouts and diff the
+summaries to see what a planner setting costs or saves.
 """
 
 from __future__ import annotations
 
 import io
+import json
+import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
+from pyspark.java_gateway import ensure_callback_server_started  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from kgforge import canonicalize, extract, fixtures, graph, linking, materialize  # noqa: E402
+from kgforge.datapipe import curate  # noqa: E402
 from kgforge.datapipe import dedup as dd  # noqa: E402
 from kgforge.datapipe import similarity as sim  # noqa: E402
+from kgforge.pipeline import run_pipeline  # noqa: E402
 from kgforge.session import get_spark  # noqa: E402
 
 
@@ -27,7 +43,115 @@ def formatted(df) -> str:
     )
 
 
+class _PlanRecorder:
+    """A ``QueryExecutionListener`` (through the Py4J callback server)
+    that keeps each finished query's executed plan as a JVM object."""
+
+    def __init__(self):
+        self.plans: list[tuple[str, object]] = []
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plans.append((func_name, qe.executedPlan()))
+
+    def onFailure(self, func_name, qe, exception):
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def _children(node) -> list:
+    """A plan node's children, opening what Catalyst hides from
+    ``children``: an AQE plan's final plan and a query stage's plan
+    (cached plans stay closed: their exchanges belong to the query that
+    filled the cache)."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if kind.endswith("QueryStageExec"):
+        return [node.plan()]
+    if kind == "CommandResultExec":
+        return [node.commandPhysicalPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def plan_summary(plan) -> dict:
+    """``exchanges``: Exchange nodes in the plan; ``over_cache``: the
+    Exchanges whose map stage (the subtree down to the next Exchange)
+    scans a cached relation, with the node names in between."""
+    exchanges, over_cache = 0, []
+
+    def stage_scans_cache(node, path):
+        for child in _children(node):
+            kind = child.getClass().getSimpleName()
+            if kind.endswith("ExchangeExec"):
+                continue
+            if kind == "InMemoryTableScanExec":
+                return path + [kind]
+            hit = stage_scans_cache(child, path + [kind])
+            if hit:
+                return hit
+        return None
+
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind.endswith("ExchangeExec"):
+            exchanges += 1
+            hit = stage_scans_cache(node, [kind])
+            if hit:
+                over_cache.append(" <- ".join(hit))
+        stack.extend(_children(node))
+    return {"exchanges": exchanges, "over_cache": over_cache}
+
+
+def executed(out_dir: str, kg_dir: str, docs_dir: str) -> None:
+    spark = get_spark("kgforge-plans")
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    recorder = _PlanRecorder()
+    spark._jsparkSession.listenerManager().register(recorder)
+    os.makedirs(out_dir, exist_ok=True)
+    summary = {}
+
+    def record(workload: str, run) -> None:
+        recorder.plans.clear()
+        run()
+        # listener events arrive on the listener bus; wait for them
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        for i, (func, plan) in enumerate(recorder.plans):
+            name = f"{workload}_{i:02d}_{func}"
+            with open(os.path.join(out_dir, name + ".txt"), "w") as f:
+                f.write(plan.toString())
+            summary[name] = plan_summary(plan)
+
+    tmp = tempfile.mkdtemp()
+    try:
+        record("kg", lambda: run_pipeline(spark, kg_dir, f"{tmp}/kg", closure_edge_mod=20))
+        docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
+
+        def curate_run():
+            kept, _ = curate.curate_corpus(
+                docs, lang="en", min_tokens=3, dedup="cluster", span_min_docs=2
+            )
+            kept.select("doc_id", "text", "n_tokens_removed").write.parquet(f"{tmp}/kept")
+            kept.unpersist()
+
+        record("curate", curate_run)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    with open(os.path.join(out_dir, "summary.json"), "w") as f:
+        json.dump(summary, f, indent=1, sort_keys=True)
+    for name, s in summary.items():
+        print(name, s["exchanges"], *s["over_cache"], sep="\t")
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--executed"]:
+        executed(*sys.argv[2:5])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("kgforge-plans", cores=8, shuffle_partitions=8)
     t = fixtures.load_transcripts(spark, sf_dir).localCheckpoint(eager=True)

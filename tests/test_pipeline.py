@@ -382,6 +382,65 @@ def test_resume_kill_and_rerun(spark, sf_dir, tmp_path):
     triples.unpersist()
 
 
+def test_run_pipeline_commit_groups_write_with_fewer_tasks_than_buckets(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """AQE sizes the bucketed triple cache from its data, so each commit
+    group's write scans fewer partitions than there are buckets (and
+    than ``spark.sql.shuffle.partitions``), while every bucket directory
+    still holds exactly one file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kgforge.pipeline import run_pipeline
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    writes: list[set[int]] = []
+    real_parquet = DataFrameWriter.parquet
+
+    def tracked_parquet(self, *args, **kwargs):
+        before = set(tracker.getJobIdsForGroup(None))
+        real_parquet(self, *args, **kwargs)
+        writes.append(set(tracker.getJobIdsForGroup(None)) - before)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", tracked_parquet)
+    out = tmp_path / "kg"
+    stats = run_pipeline(spark, sf_dir, str(out))
+    monkeypatch.undo()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def tasks(job_ids: set[int]) -> int:
+        stages = (tracker.getStageInfo(s) for j in job_ids for s in tracker.getJobInfo(j).stageIds)
+        return sum(s.numCompletedTasks for s in stages if s is not None)
+
+    n_buckets = resume.DEFAULT_BUCKETS
+    width = min(n_buckets, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert len(writes) == n_buckets // 8  # commit_every=8
+    for job_ids in writes:
+        assert 0 < tasks(job_ids) < width
+    manifest = resume.read_manifest(str(out))
+    assert len(manifest["committed"]) == n_buckets
+    assert sum(v["n_triples"] for v in manifest["committed"].values()) == stats["total_triples"]
+    bucket_dirs = sorted((out / "triples").glob("subj_bucket=*"))
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+
+
+def test_session_lets_aqe_coalesce_cached_plans(spark):
+    """``get_spark`` lets AQE coalesce the last stage of a cached plan:
+    a cached ``repartition("k")`` frame of a few rows materializes with
+    fewer partitions than ``spark.sql.shuffle.partitions``. A renamed or
+    ignored planner key fails here instead of silently widening every
+    KG-build cache back to the session's shuffle width."""
+    df = spark.range(1000).withColumn("k", F.col("id") % 50).repartition("k").cache()
+    try:
+        assert df.count() == 1000
+        assert df.rdd.getNumPartitions() < int(spark.conf.get("spark.sql.shuffle.partitions"))
+    finally:
+        df.unpersist()
+
+
 def test_fixpoint_loops_restore_unset_session_conf(spark, sf_dir):
     """A session that never set ``spark.sql.shuffle.partitions`` (a
     plain spark-submit) runs the fixpoint loops, and every conf they

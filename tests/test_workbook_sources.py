@@ -189,3 +189,79 @@ def test_sniffed_rescue_parses_the_workbook_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(xlsx, "read_workbook", counting)
     assert sources.read_excel_parts(spark, path, sniffed=True).count() == 6
     assert len(calls) == 1
+
+
+def test_sniffed_rescue_strips_a_padded_header(spark, tmp_path):
+    """The rescue finds the header row on stripped cells and frames the
+    table on those same stripped cells: a ' Number ' / 'Name ' header
+    names the Number and Name columns, a padded mirror row under it is
+    dropped, and every part is read."""
+    padded = [f" {h} " if h in ("Number", "Name") else h for h in PARTS_HEADER]
+    rows = [[f"{100 + i}", f"part {i}", "Part", "Make", "Design", "RELEASED", "A", "Lib"]
+            for i in range(6)]
+    path = _book(tmp_path, {"WTPart-Sheet": [padded, padded] + rows})
+    assert _parts(spark, path) == {}
+    got = _parts(spark, path, sniffed=True)
+    assert set(got) == {f"{100 + i}" for i in range(6)}
+    assert got["103"]["name"] == "part 3" and got["103"]["revision"] == "A"
+
+
+def test_link_readers_parse_only_their_sheet(spark, tmp_path, monkeypatch):
+    """Each link reader parses the XML of its own sheet only, the parts
+    and BOM readers parse every sheet, and each reader returns the same
+    rows as it does from a read of the whole workbook; one
+    ``import_workbook`` therefore parses 4 + 4 + 1 + 1 sheets."""
+    from collections import Counter
+
+    from kgforge.pipeline import import_workbook
+
+    path = _book(tmp_path, {
+        "WTPart-Sheet": BANNER + [
+            PARTS_HEADER,
+            ["100", "Sled", "Part", "Make", "Design", "RELEASED", "A", "Lib"],
+            ["200", "Belt", "Part", "Buy", "Design", "DESIGN", "B", "Lib"],
+        ],
+        "BOM-Sheet": BANNER + [["Level", "Number"], [0, "100"], [1, "200"]],
+        "WTPartAlternateLink-Sheet": BANNER + [
+            ["Child Part Number", "Replacement Part Number"], ["200", "100"],
+        ],
+        "WTPartDescribeLink-Sheet": BANNER + [
+            ["Document Number", "Part Number"], ["D1", "100"],
+        ],
+    })
+    readers = {
+        "parts": sources.read_excel_parts,
+        "bom": sources.read_excel_bom_edges,
+        "alternates": sources.read_excel_alternates,
+        "describe": sources.read_excel_describe_links,
+    }
+
+    def rows(read) -> Counter:
+        return Counter(map(tuple, read(spark, path).collect()))
+
+    real_read, real_grid = xlsx.read_workbook, xlsx._sheet_grid
+
+    def read_all(p, render_dates=False, sheets=None):
+        return real_read(p, render_dates)
+
+    monkeypatch.setattr(xlsx, "read_workbook", read_all)
+    want = {name: rows(read) for name, read in readers.items()}
+    monkeypatch.setattr(xlsx, "read_workbook", real_read)
+
+    parsed: list[str] = []
+
+    def counting_grid(zf, member, *args):
+        parsed.append(member)
+        return real_grid(zf, member, *args)
+
+    monkeypatch.setattr(xlsx, "_sheet_grid", counting_grid)
+    n_parsed = {}
+    for name, read in readers.items():
+        parsed.clear()
+        assert rows(read) == want[name], name
+        n_parsed[name] = len(parsed)
+    assert n_parsed == {"parts": 4, "bom": 4, "alternates": 1, "describe": 1}
+    assert all(want.values())
+    parsed.clear()
+    import_workbook(spark, path)
+    assert len(parsed) == 4 + 4 + 1 + 1
