@@ -4,7 +4,11 @@ The expensive pieces — transitive closure and connected components —
 are driver-side fixpoint loops over DataFrame joins with
 ``localCheckpoint()`` per iteration to cut lineage (SURVEY §4.3): the
 distributed replacement for the reference's recursive Python DFS
-(/root/reference/src/utils/spreadsheet_loader.py:980-1024).
+(src/utils/spreadsheet_loader.py:980-1024).
+
+Every loop runs in one :func:`_constraint_propagation_off` scope and
+sets no shuffle width: AQE sizes each round from its data, as it sizes
+the rest of the build. Only :func:`khop_descendants` turns AQE off.
 """
 
 from __future__ import annotations
@@ -16,21 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 
-def _fixpoint_partitions(spark, n_rows: int, rows_per_partition: int = 10_000) -> int:
-    """Shuffle-partition count for a fixpoint loop, derived from the
-    input size: each round is a small shuffle, so at fixture scale the
-    session's corpus-sized setting (e.g. 32) pays more task-scheduling
-    overhead than compute (measured 2x closure wall time at sf0.1).
-    Never exceeds the session conf (the cluster-parallelism proxy), so
-    at 100x input the loop still fans out fully."""
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(8, min(configured, n_rows // rows_per_partition + 1))
-
-
 @contextmanager
-def _constraint_propagation_off(
-    spark, shuffle_partitions: int | None = None, aqe_off: bool = True
-):
+def _constraint_propagation_off(spark, aqe_off: bool = False):
     """Loop-scoped planner confs for driver-side fixpoint iterations.
 
     - constraintPropagation off: Catalyst's Union constraint rewrite
@@ -38,23 +29,16 @@ def _constraint_propagation_off(
       localCheckpoint'ed plans with reused attribute ids (observed on
       Spark 4.1), and constraint propagation buys nothing inside a
       fixpoint loop.
-    - AQE off (``aqe_off=True``, the small-input default): every round
-      is a fresh small plan over already-known sizes; adaptive
-      re-optimization between the per-round stages is pure driver
-      latency (measured ~20-30% of closure wall time at sf0.1) with
-      nothing to re-plan. Callers whose fixpoint input is large enough
-      to use the session's full shuffle parallelism pass
-      ``aqe_off=False`` to keep AQE's skew-join splitting on hub keys —
-      at cluster scale the per-round driver latency is dwarfed by a
-      skewed reducer.
+    - AQE stays on unless ``aqe_off=True``: it sizes every round's
+      shuffles from the round's data, as it does the rest of the build.
+      :func:`khop_descendants` is the one caller that turns it off (its
+      docstring says why).
+
+    Each key is restored on exit, by unset when the caller never set it.
     """
-    keys = {
-        "spark.sql.constraintPropagation.enabled": "false",
-    }
+    keys = {"spark.sql.constraintPropagation.enabled": "false"}
     if aqe_off:
         keys["spark.sql.adaptive.enabled"] = "false"
-    if shuffle_partitions is not None:
-        keys["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # None = the caller never set it: restore by unset, not by a default
     prev = {k: spark.conf.getAll.get(k) for k in keys}
     for k, v in keys.items():
@@ -206,10 +190,11 @@ def transitive_closure(
     - termination is X_k = ∅, one round earlier than the old
       delta-empty check: if any pair had distance > 2^k its exact-2^k
       prefix would exist, so an empty exact class proves completeness;
-    - AQE stays ON at the session's parallelism: with the frontier
-      broadcast the per-round shuffles are the min-dist aggregate and
-      the anti-join, where runtime coalescing/skew-splitting measured
-      faster than the r5 fixed-8-partition/AQE-off configuration.
+    - AQE sizes every round, the encode and probe included: with the
+      frontier broadcast the per-round shuffles are the min-dist
+      aggregate and the anti-join, where runtime coalescing and
+      skew-splitting measured faster than a fixed 8-partition, AQE-off
+      loop.
 
     Semantics match the reference DFS (:980-1024): every (desc, anc)
     with a path of >=1 edge; cycles converge (shortest distances are
@@ -302,7 +287,6 @@ def transitive_closure(
                 # lazy: the loop-entry count materializes it
                 .localCheckpoint(eager=False)
             )
-    with _constraint_propagation_off(spark, aqe_off=False):
         closure = e
         exact = e
         # castable: |e| came with the probe agg; dictionary path: this
@@ -378,14 +362,13 @@ def transitive_closure_seminaive(
     on long chains. Raises rather than silently truncating at the cap
     — with the default 64-round cap this variant dropped the 37
     deepest pairs of the sf0.1 fixture graph (diameter > 64).
-    ``stats`` follows :func:`transitive_closure`'s contract; the final
-    round's delta is the empty one."""
+    AQE sizes every round's join, ``dropDuplicates`` and anti-join
+    from the round's data. ``stats`` follows :func:`transitive_closure`'s
+    contract; the final round's delta is the empty one."""
     spark = edges.sparkSession
-    # lazy: the count below is the checkpoint-materializing action
-    base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=False)
-    parts = _fixpoint_partitions(spark, base.count() * 8)
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _constraint_propagation_off(spark, parts, aqe_off=parts < configured):
+    with _constraint_propagation_off(spark):
+        # lazy: round 1's count materializes it
+        base = edges.select("parent", "child").dropDuplicates().localCheckpoint(eager=False)
         closure = base
         frontier = base
         for i in range(max_iterations):
@@ -418,12 +401,18 @@ def transitive_closure_seminaive(
 
 def khop_descendants(edges: DataFrame, roots: DataFrame, max_depth: int) -> DataFrame:
     """G6/G8: bounded BFS from roots with depth column
-    (scripts/visualize_graph.py:99-157). roots: (number)."""
+    (scripts/visualize_graph.py:99-157). roots: (number).
+
+    The one fixpoint loop that runs with AQE off: each round's count is
+    then exactly one Spark job, with no separate job per shuffle stage
+    (pinned by ``test_khop_descendants_matches_bfs_with_one_job_per_round``).
+    A BFS frontier from a handful of roots is a few rows, so there is
+    nothing for AQE to re-plan between its stages."""
     frontier = roots.select(
         F.col("number").alias("root"), F.col("number").alias("node"), F.lit(0).alias("depth")
     )
     out = frontier
-    with _constraint_propagation_off(edges.sparkSession):
+    with _constraint_propagation_off(edges.sparkSession, aqe_off=True):
         for d in range(1, max_depth + 1):
             frontier = (
                 frontier.alias("f")
@@ -471,11 +460,11 @@ def connected_components(
 
     Per-round cost is kept minimal because at dedup-cluster shapes
     (tiny diameter, so 3-5 rounds) the fixed cost per round IS the
-    stage cost: loop shuffles are sized to the label frame
-    (:func:`_fixpoint_partitions` — never above the session conf, so a
-    cluster-scale input still fans out fully), convergence is read off
-    the checkpointed round itself (a ``prev`` column + count — no extra
-    join), and each superseded round's checkpoint is freed eagerly.
+    stage cost: AQE sizes each round's shuffles from the label frame
+    (coalesced at fixture scale, full session width on a cluster-scale
+    input), convergence is read off the checkpointed round itself (a
+    ``prev`` column + count — no extra join), and each superseded
+    round's checkpoint is freed eagerly.
     ``stats`` (mutated in place) records ``rounds`` and ``delta_sizes``
     = labels changed per round, the same contract as the closure's —
     scripts/cc_scale_curve.py turns it into the measured scale curve.
@@ -486,15 +475,10 @@ def connected_components(
             edges.select(F.col("parent").alias("a"), F.col("child").alias("b"))
             .unionByName(edges.select(F.col("child").alias("a"), F.col("parent").alias("b")))
             .dropDuplicates()
-            # lazy: the sizing count below is the materializing action —
-            # checkpoint + count are ONE job instead of two (a local
-            # checkpoint persists its blocks during whatever job first
-            # computes it)
+            # lazy: round 1's count materializes it (a local checkpoint
+            # persists its blocks during whatever job first computes it)
             .localCheckpoint(eager=False)
         )
-    parts = _fixpoint_partitions(spark, undirected.count())
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _constraint_propagation_off(spark, parts, aqe_off=parts < configured):
         labels_cp = (
             undirected.select(F.col("a").alias("node"))
             .dropDuplicates()
@@ -518,8 +502,8 @@ def connected_components(
                     F.least(F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))).alias("component"),
                 )
                 # lazy: the convergence count IS the materializing
-                # action (fused — one driver job per round, not two; at
-                # dedup-cluster shapes the per-round job launch is the
+                # action (fused — one driver action per round, not two;
+                # at dedup-cluster shapes the per-round launch is the
                 # stage cost)
                 .localCheckpoint(eager=False)
             )

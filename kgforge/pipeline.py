@@ -161,7 +161,6 @@ def import_workbook(
     excel_path: str,
     bom_csv: str | None = None,
     out_dir: str | None = None,
-    sheets: list[str] | None = None,
 ) -> dict:
     """End-to-end import of a real .xlsx workbook — the reference's
     ``import_data`` flow (spreadsheet_loader.py:1355-1527) re-expressed
@@ -178,17 +177,19 @@ def import_workbook(
     partOfAssembly / 8 hasAlternate — docs/GRAPHDB_QUERIES.md:6-20) are
     pinned against this function by tests/test_snowmobile_golden.py.
     """
-    from kgforge import sources
+    from kgforge import sources, xlsx
 
-    entities = sources.read_excel_parts(spark, excel_path, sheets).cache()
+    # one parse of the workbook feeds every sheet reader
+    wb = xlsx.read_workbook(excel_path)
+    entities = sources.read_excel_parts(spark, wb).cache()
     if bom_csv:
         edges = sources.read_bom_csv(spark, bom_csv)
     else:
-        edges = sources.read_excel_bom_edges(spark, excel_path, sheets)
+        edges = sources.read_excel_bom_edges(spark, wb)
     edges = edges.cache()
     closure = graph.transitive_closure(edges)
-    alt = sources.read_excel_alternates(spark, excel_path)
-    desc = sources.read_excel_describe_links(spark, excel_path)
+    alt = sources.read_excel_alternates(spark, wb)
+    desc = sources.read_excel_describe_links(spark, wb)
     triples = _union_families(entities, edges, closure, alt, desc)
     tail = _materialize(
         triples.dropDuplicates(["subj", "pred", "obj"]),

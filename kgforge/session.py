@@ -31,7 +31,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 def get_spark(
     app_name: str = "kgforge",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession.
@@ -42,10 +42,6 @@ def get_spark(
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("KGFORGE_SHUFFLE_PARTITIONS", str(DEFAULT_SHUFFLE_PARTITIONS))
-        )
     builder = SparkSession.builder.appName(app_name)
     # Under spark-submit the cluster master arrives via --master and the
     # JVM is already running (PythonRunner exports PYSPARK_GATEWAY_PORT

@@ -351,11 +351,18 @@ def _cells(t: xlsx.Table, row: list, columns: Sequence[str]) -> tuple:
     return tuple(_cell_str(t.get(row, c)) for c in columns)
 
 
-def _workbook_grids(path: str, sheets: list[str] | None):
-    """One driver-side parse of the workbook: ``(sheet_name, grid)``
-    for the requested sheets (all, in workbook order, by default);
-    absent sheets are skipped and unrequested ones are not parsed."""
-    wb = xlsx.read_workbook(path, sheets=sheets)
+def _parsed(path: str | dict, sheets: list[str] | None) -> dict:
+    """The workbook readers' ``path``: an .xlsx path is parsed for the
+    requested sheets only (all by default); a workbook that
+    :func:`xlsx.read_workbook` already parsed is used as is, so one
+    parse can feed every reader (``pipeline.import_workbook``)."""
+    return path if isinstance(path, dict) else xlsx.read_workbook(path, sheets=sheets)
+
+
+def _workbook_grids(path: str | dict, sheets: list[str] | None):
+    """``(sheet_name, grid)`` for the requested sheets (all, in workbook
+    order, by default); absent sheets are skipped."""
+    wb = _parsed(path, sheets)
     for name in sheets or list(wb):
         if name in wb:
             yield name, wb[name]
@@ -410,7 +417,7 @@ def _parts_table(grid: list[list], sniffed: bool = False) -> xlsx.Table | None:
 
 def read_excel_parts(
     spark: SparkSession,
-    path: str,
+    path: str | dict,
     sheets: list[str] | None = None,
     sniffed: bool = False,
 ) -> DataFrame:
@@ -435,6 +442,10 @@ def read_excel_parts(
     header, the same parsed grid is scanned for the first row carrying
     the required headers, and leading rows that merely mirror that
     header are dropped instead of becoming artifact parts.
+
+    ``path`` is an .xlsx path or a workbook already parsed by
+    :func:`kgforge.xlsx.read_workbook`; the BOM and link readers below
+    take the same.
     """
     rows: list[tuple] = []
     for sheet_name, grid in _workbook_grids(path, sheets):
@@ -451,7 +462,7 @@ def read_excel_parts(
     # catalogs belong in the parquet/CSV scans.
     if len(rows) > 2_000_000:
         raise ValueError(
-            f"workbook {path!r} yielded {len(rows)} part rows — beyond the "
+            f"workbook yielded {len(rows)} part rows — beyond the "
             "driver-side dimension-catalog bound (2M); export to CSV/parquet "
             "and use the distributed scans instead"
         )
@@ -469,7 +480,7 @@ def read_excel_parts(
 
 
 def read_excel_bom_levels(
-    spark: SparkSession, path: str, sheets: list[str] | None = None
+    spark: SparkSession, path: str | dict, sheets: list[str] | None = None
 ) -> DataFrame:
     """Hierarchical BOM rows from every workbook sheet with Number+Level
     columns (the reference's in-Excel hierarchical branch,
@@ -508,7 +519,7 @@ def read_excel_bom_levels(
 
 
 def read_excel_bom_edges(
-    spark: SparkSession, path: str, sheets: list[str] | None = None
+    spark: SparkSession, path: str | dict, sheets: list[str] | None = None
 ) -> DataFrame:
     """Level-stack decode of :func:`read_excel_bom_levels` into
     deduplicated ``(parent, child)`` edges (generate_bom_from_excel's
@@ -517,14 +528,14 @@ def read_excel_bom_edges(
 
 
 def _link_sheet(
-    spark: SparkSession, path: str, sheet: str, columns: tuple[str, ...], schema: str
+    spark: SparkSession, path: str | dict, sheet: str, columns: tuple[str, ...], schema: str
 ) -> DataFrame | None:
     """One link sheet (parse_alternate_links / parse_describe_links):
     the framed sheet with its 'Action' row promoted to the header, read
     into ``schema`` as the cells of ``columns`` (an absent column reads
     as null). None when the sheet is absent or lacks either of the
     first two columns, which are required."""
-    grid = xlsx.read_workbook(path, sheets=[sheet]).get(sheet)
+    grid = _parsed(path, [sheet]).get(sheet)
     if grid is None:
         return None
     t = _frame(grid)
@@ -536,7 +547,7 @@ def _link_sheet(
 
 
 def read_excel_alternates(
-    spark: SparkSession, path: str, sheet: str = "WTPartAlternateLink-Sheet"
+    spark: SparkSession, path: str | dict, sheet: str = "WTPartAlternateLink-Sheet"
 ) -> DataFrame:
     """S6: alternate/replacement links (parse_alternate_links :296-341):
     skiprows-4 read of the link sheet, 'Action'-row header promotion,
@@ -562,7 +573,7 @@ def read_excel_alternates(
 
 
 def read_excel_describe_links(
-    spark: SparkSession, path: str, sheet: str = "WTPartDescribeLink-Sheet"
+    spark: SparkSession, path: str | dict, sheet: str = "WTPartDescribeLink-Sheet"
 ) -> DataFrame:
     """S7: document-describes-part links (parse_describe_links
     :342-376); absent sheet or missing required columns -> empty."""

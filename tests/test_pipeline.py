@@ -476,6 +476,40 @@ def test_fixpoint_loops_restore_unset_session_conf(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
+def test_fixpoint_loops_leave_sizing_to_aqe(spark, monkeypatch):
+    """No fixpoint loop sets a shuffle width, and only
+    ``khop_descendants`` switches AQE: every other loop lets AQE size
+    each round from its data. Records the key of every
+    ``spark.conf.set`` a loop makes, restores included."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_set = RuntimeConfig.set
+    keys: list[str] = []
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")], "parent string, child string")
+    roots = spark.createDataFrame([("a",)], "number string")
+    runs = {
+        "transitive_closure": lambda: graph.transitive_closure(edges).count(),
+        "transitive_closure_seminaive": lambda: graph.transitive_closure_seminaive(edges).count(),
+        "connected_components": lambda: graph.connected_components(edges).count(),
+        "khop_descendants": lambda: graph.khop_descendants(edges, roots, max_depth=3).count(),
+    }
+    touched = {}
+    for name, run in runs.items():
+        keys.clear()
+        run()
+        touched[name] = set(keys)
+    assert all(touched.values()), touched
+    assert not [n for n, k in touched.items() if "spark.sql.shuffle.partitions" in k], touched
+    aqe = sorted(n for n, k in touched.items() if "spark.sql.adaptive.enabled" in k)
+    assert aqe == ["khop_descendants"], touched
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as se
 
