@@ -4,8 +4,8 @@ Every primitive in :mod:`kgforge.datapipe` is individually
 oracle-checked; this module composes them into the shape a production
 training-data build actually runs —
 
-    language filter -> quality filter -> duplicate-cluster keeper
-    -> (optional) cross-document repeated-span removal
+    language filter -> minimum-length filter -> duplicate-cluster
+    keeper -> (optional) cross-document repeated-span removal
 
 — and returns both the curated corpus and the per-stage attrition
 FUNNEL (the audit artifact every data pipeline publishes alongside its
@@ -13,7 +13,8 @@ output).  Pytest verifies the composition stage-by-stage against the
 already-oracled primitives (tests/test_datapipe.py).
 
 Scale shape: the filters are pure column expressions over one scan;
-dedup adds the bucketed pair source + CC closure (never all-pairs);
+dedup (near-duplicate clusters, the one mode) adds the bucketed pair
+source + CC closure (never all-pairs);
 span removal adds one shingle-keyed aggregate + equi-join.  The funnel
 counts are one aggregate per stage boundary — at 100 TB those are
 map-side-combined counts, not extra shuffles of the data.
@@ -23,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kgforge.datapipe import dedup as dd
 from kgforge.datapipe import text as dtext
@@ -34,7 +34,6 @@ def curate_corpus(
     *,
     lang: str | None = None,
     min_tokens: int | None = None,
-    max_tokens: int | None = None,
     dedup: str = "cluster",
     span_min_docs: int | None = None,
 ) -> tuple[DataFrame, list[dict]]:
@@ -43,11 +42,11 @@ def curate_corpus(
 
     - ``lang``: keep documents whose :func:`kgforge.datapipe.text
       .lang_id` prediction equals this code;
-    - ``min_tokens`` / ``max_tokens``: whitespace-token length gate;
-    - ``dedup``: ``"exact"`` (fingerprint groups, min-doc_id keeper),
-      ``"cluster"`` (MinHash-LSH pairs -> connected-component clusters,
-      longest-text keeper — catches near-dups pairwise banding alone
-      would miss), or ``"none"``;
+    - ``min_tokens``: minimum whitespace-token length;
+    - ``dedup``: ``"cluster"``, the only mode (MinHash-LSH pairs ->
+      connected-component clusters, longest-text keeper — catches
+      near-dups pairwise banding alone would miss); any other value
+      raises ``ValueError``;
     - ``span_min_docs``: when set, additionally rewrite the surviving
       texts with cross-document repeated spans removed
       (:func:`kgforge.datapipe.dedup.repeated_spans` at this
@@ -75,6 +74,8 @@ def curate_corpus(
     The returned ``curated`` frame is the last such cache; callers
     should ``curated.unpersist()`` once it has been written out.
     """
+    if dedup != "cluster":
+        raise ValueError(f"unknown dedup mode {dedup!r}")
     funnel: list[dict] = []
     cached_prev: DataFrame | None = None
 
@@ -99,14 +100,8 @@ def curate_corpus(
     filter_stages = []
     if lang is not None:
         filter_stages.append(("lang", dtext.lang_id(F.col("text")) == lang))
-    if min_tokens is not None or max_tokens is not None:
-        toks = dtext.token_count_ws(F.col("text"))
-        cond = F.lit(True)
-        if min_tokens is not None:
-            cond = cond & (toks >= min_tokens)
-        if max_tokens is not None:
-            cond = cond & (toks <= max_tokens)
-        filter_stages.append(("quality", cond))
+    if min_tokens is not None:
+        filter_stages.append(("quality", dtext.token_count_ws(F.col("text")) >= min_tokens))
     aggs = [F.count("*").alias("__n0")]
     running = None
     for i, (_, c) in enumerate(filter_stages):
@@ -119,28 +114,18 @@ def curate_corpus(
     cur = documents.filter(running) if running is not None else documents
     n = counts[-1]
 
-    if dedup == "exact":
-        keep = cur.withColumn("fp", dtext.fingerprint_col(F.col("text"))).withColumn(
-            "keep",
-            F.row_number().over(Window.partitionBy("fp").orderBy("doc_id")) == 1,
-        )
-        cur = gate("dedup_exact", keep.filter("keep").drop("fp", "keep"), n)
-        n = funnel[-1]["n_out"]
-    elif dedup == "cluster":
-        # the dedup input is read THREE times inside this stage (the
-        # LSH signature build, the cluster member join, the keeper
-        # anti-join) — cache it for the stage's duration so the filter
-        # subtree runs once, and release it as soon as the stage's own
-        # output cache is materialized
-        stage_in = cur.cache()
-        pairs = dd.lsh_candidate_pairs(stage_in)
-        clusters = dd.dedup_clusters(stage_in, pairs)
-        losers = clusters.filter(~F.col("keep")).select("doc_id")
-        cur = gate("dedup_cluster", stage_in.join(losers, "doc_id", "left_anti"), n)
-        n = funnel[-1]["n_out"]
-        stage_in.unpersist()
-    elif dedup != "none":  # pragma: no cover
-        raise ValueError(f"unknown dedup mode {dedup!r}")
+    # the dedup input is read THREE times inside this stage (the LSH
+    # signature build, the cluster member join, the keeper anti-join) —
+    # cache it for the stage's duration so the filter subtree runs once,
+    # and release it as soon as the stage's own output cache is
+    # materialized
+    stage_in = cur.cache()
+    pairs = dd.lsh_candidate_pairs(stage_in)
+    clusters = dd.dedup_clusters(stage_in, pairs)
+    losers = clusters.filter(~F.col("keep")).select("doc_id")
+    cur = gate("dedup_cluster", stage_in.join(losers, "doc_id", "left_anti"), n)
+    n = funnel[-1]["n_out"]
+    stage_in.unpersist()
 
     if span_min_docs is not None:
         spans = dd.repeated_spans(cur, min_docs=span_min_docs)

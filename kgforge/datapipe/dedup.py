@@ -5,13 +5,19 @@
   aggregate (the exact pairwise path — quadratic in near-dup cluster
   size, linear elsewhere because pairs only form on shared shingles);
 - MinHash + LSH: per-doc signatures (min of per-seed keyed hashes) ->
-  banding -> bucket join (the 100 TB path: no all-pairs stage, cost is
-  bounded by bucket collisions);
+  banding -> in-bucket pair enumeration (the 100 TB path: no all-pairs
+  stage, cost is bounded by bucket collisions);
 - SimHash: 64-bit sign-aggregated token hashes (pandas UDF);
+- repeated spans: maximal runs of word-k-grams shared by at least
+  ``min_docs`` documents, and their removal;
+- clusters: any pair source closed into connected components, one
+  keeper per cluster;
 - embedding-cosine near-dup lives in similarity.py.
 
-Hashing uses md5 hex strings (engine-portable, deterministic) rather
-than engine-native hash functions, so every stage is oracle-checkable.
+Every shingle-based operator reads its word-k-grams from one
+expression (``_word_grams``). Hashing uses md5 hex strings
+(engine-portable, deterministic) rather than engine-native hash
+functions, so every stage is oracle-checkable.
 """
 
 from __future__ import annotations
@@ -60,15 +66,21 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def shingles(documents: DataFrame, k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """Distinct word-k-gram shingles per doc (array ops, no UDF)."""
+def _word_grams(k: int):
+    """The word-k-gram array of ``text``: lower-cased, split on
+    whitespace, one gram per start position. A document shorter than
+    ``k`` tokens yields its whole text as one gram."""
     toks = F.split(F.lower(F.col("text")), r"\s+")
-    grams = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
     )
+
+
+def shingles(documents: DataFrame, k: int = DEFAULT_SHINGLE_K) -> DataFrame:
+    """Distinct word-k-gram shingles per doc (array ops, no UDF)."""
     return (
-        documents.select("doc_id", F.explode(grams).alias("shingle"))
+        documents.select("doc_id", F.explode(_word_grams(k)).alias("shingle"))
         .filter(F.col("shingle") != "")
         .dropDuplicates(["doc_id", "shingle"])
     )
@@ -143,12 +155,7 @@ def minhash_band_keys(
       sort_array(collect_list(struct(seed, sig))) in seed order is
       exactly the column order here), then one posexplode.
     """
-    toks = F.split(F.lower(F.col("text")), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    sh = documents.select("doc_id", F.explode(grams).alias("shingle")).filter(
+    sh = documents.select("doc_id", F.explode(_word_grams(k)).alias("shingle")).filter(
         F.col("shingle") != ""
     )
     sigrow = sh.groupBy("doc_id").agg(
@@ -226,13 +233,8 @@ def positional_shingles(documents: DataFrame, k: int = DEFAULT_SHINGLE_K) -> Dat
     """Word-k-gram shingles WITH their token position (duplicates kept —
     position matters), the substrate for span-level dedup. Same
     tokenization and short-document quirk as :func:`shingles`."""
-    toks = F.split(F.lower(F.col("text")), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
     return documents.select(
-        "doc_id", F.posexplode(grams).alias("pos", "shingle")
+        "doc_id", F.posexplode(_word_grams(k)).alias("pos", "shingle")
     ).filter(F.col("shingle") != "")
 
 
@@ -240,7 +242,6 @@ def repeated_spans(
     documents: DataFrame,
     k: int = DEFAULT_SHINGLE_K,
     min_docs: int = 2,
-    min_total: int | None = None,
 ) -> DataFrame:
     """Cross-document repeated-SPAN detection at n-gram granularity —
     the training-set "dedup repeated substrings" op (the suffix-array
@@ -251,10 +252,6 @@ def repeated_spans(
     Returns ``(doc_id, span_start, span_end, n_grams)`` with token
     indices inclusive (span_end covers the last gram's final token).
 
-    ``min_total`` switches the threshold to TOTAL occurrences across
-    the corpus (within-document repeats count) — the suffix-array
-    paper's occurrence-count criterion — instead of distinct documents.
-
     Scale shape (no all-pairs, no suffix array): one groupBy(shingle)
     (map-side-combined count-distinct, bucketed by shingle hash), one
     equi-join back on shingle, and one per-doc window for the
@@ -263,14 +260,7 @@ def repeated_spans(
     split applies), never a pairwise blowup.
     """
     ps = positional_shingles(documents, k)
-    if min_total is not None:
-        rep = (
-            ps.groupBy("shingle")
-            .agg(F.count("*").alias("nt"))
-            .filter(F.col("nt") >= min_total)
-            .select("shingle")
-        )
-    elif min_docs == 2:
+    if min_docs == 2:
         # count_distinct(doc_id) >= 2  <=>  min(doc_id) != max(doc_id):
         # two plain min/max partial aggregates shuffle a pair of longs
         # per (shingle, partition) instead of the distinct-aggregate's
@@ -529,18 +519,19 @@ def dedup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     BENCH_cc_curve.json.
 
     Returns (doc_id, cluster_id, keep) for every document that belongs
-    to some cluster; documents with no near-dup pair are implicitly
-    their own keepers. At 100 TB every step is the CC fixpoint's
-    bounded shuffles plus one window — no all-pairs stage is added on
-    top of the (already bucketed) pair source.
+    to some cluster, with ``cluster_id`` the cluster's minimum doc_id;
+    documents with no near-dup pair are implicitly their own keepers.
+    At 100 TB every step is the CC fixpoint's bounded shuffles plus one
+    window — no all-pairs stage is added on top of the (already
+    bucketed) pair source.
     """
     from pyspark.sql import Window
 
     from kgforge import graph
 
+    # CC on the ids' own type: its min label is the minimum member id
     edges = pairs.select(
-        F.col(pairs.columns[0]).cast("string").alias("parent"),
-        F.col(pairs.columns[1]).cast("string").alias("child"),
+        F.col(pairs.columns[0]).alias("parent"), F.col(pairs.columns[1]).alias("child")
     )
     comps = graph.connected_components(edges).select(
         F.col("node").cast("long").alias("doc_id"),

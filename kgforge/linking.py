@@ -17,11 +17,14 @@ Physical strategy (north_star: broadcast-then-salted-shuffle):
 - ``broadcast``: the canonical dictionary is the small side; one
   broadcast hash join, zero shuffle of the fact table.
 - ``salted``: for dictionaries too large to broadcast with Zipfian-hot
-  names — the dictionary is exploded K ways on a salt column and the
-  fact side picks a deterministic salt, so one hot name spreads over K
-  reducers instead of one.
+  names — the dictionary is exploded ``DEFAULT_SALT_BUCKETS`` ways on a
+  salt column and the fact side picks a deterministic salt, so one hot
+  name spreads over that many reducers instead of one.
 
-Both produce identical rows (tested).
+Both produce identical rows (tested). :func:`link_mentions` builds
+its two dictionary frames (the name index and the known numbers) from
+``entities`` on each call; only :func:`kgforge.graph.bom_edges_direct`
+takes them prebuilt.
 """
 
 from __future__ import annotations
@@ -74,36 +77,28 @@ def link_mentions(
     mentions: DataFrame,
     entities: DataFrame,
     strategy: str = "broadcast",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    index: DataFrame | None = None,
-    numbers: DataFrame | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
 ) -> DataFrame:
     """Resolve mention rows (*key_cols, mention) against the canonical
     dictionary -> + (status, resolved_number).
 
-    ``index``/``numbers`` accept prebuilt (cached) dictionary frames so
-    repeated linking jobs reuse one dictionary build — on a cluster the
-    broadcast is prepared once and shared across the job DAG.
     ``key_cols`` carries the caller's row identity through unchanged —
     transcript linking keys on (conv_id, turn_idx, slot), the name-based
     BOM file flow keys on its edge pair.
     """
-    if index is None:
-        index = build_name_index(entities)
-    if numbers is None:
-        numbers = entities.select(F.col("number").alias("known_number")).distinct()
+    index = build_name_index(entities)
+    numbers = entities.select(F.col("number").alias("known_number")).distinct()
     m = mentions.withColumn("norm_mention", normalize_number_col(F.col("mention")))
 
     if strategy == "broadcast":
         joined = m.join(F.broadcast(index), m.mention == index.name, "left")
     elif strategy == "salted":
         salted_index = index.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+            "salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALT_BUCKETS - 1)))
         )
         m = m.withColumn(
             "salt",
-            F.pmod(F.xxhash64(*key_cols), F.lit(salt_buckets)).cast("int"),
+            F.pmod(F.xxhash64(*key_cols), F.lit(DEFAULT_SALT_BUCKETS)).cast("int"),
         )
         joined = m.hint("shuffle_hash").join(
             salted_index,

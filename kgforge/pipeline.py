@@ -26,12 +26,8 @@ from kgforge import canonicalize, extract, fixtures, graph, linking, materialize
 
 @dataclass
 class GraphBuild:
-    transcripts: DataFrame
-    entities: DataFrame
-    linked: DataFrame
-    edges: DataFrame
+    edges: DataFrame  # cached; the caller unpersists it
     n_edges: int
-    closure: DataFrame
     triples: DataFrame
 
 
@@ -126,7 +122,7 @@ def build_graph(
         entities, edges, closure, alt, desc,
         materialize.canonical_equivalence_triples(canon),
     )
-    return GraphBuild(transcripts, entities, linked, edges, n_edges, closure, triples)
+    return GraphBuild(edges, n_edges, triples)
 
 
 def run_pipeline(

@@ -17,6 +17,11 @@ key (default false in Spark 4.1); under spark-submit pass it as
 Spark warns that a query may then need an extra shuffle to read cached
 data; the KG tail and ``curate_corpus`` plans gain none
 (``scripts/dump_plans.py --executed``).
+
+The environment sets deployment only: ``SPARK_GRAFT_CPUS`` (cores),
+``KGFORGE_DRIVER_MEM`` and ``KGFORGE_LOCAL_DIR``. Every session
+pre-forks its Python worker pool (:func:`_warm_python_workers`); no
+setting turns that off.
 """
 
 from __future__ import annotations
@@ -103,14 +108,11 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     scan). A production cluster amortizes that over hours; here one
     parallel no-op Arrow batch per task slot moves it to session
     creation, exactly like the executor warm-up a long-lived job does.
-    Disable with KGFORGE_WARM_PYTHON=0 (e.g. for UDF-free one-shots).
 
     A failure raises out of :func:`get_spark` with its traceback: a
     worker pool that cannot run a UDF (say, cannot import ``kgforge``)
     is broken, and the first real UDF job would fail the same way.
     """
-    if os.environ.get("KGFORGE_WARM_PYTHON", "1") == "0":
-        return
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED:
         return

@@ -11,12 +11,13 @@ The reference accepts two CSV shapes and routes by header:
   divergence: the reference's ``--bom`` CSV flow assigns children to
   previous-level parts ROUND-ROBIN by index
   (``_parse_hierarchical_bom_csv`` :194-252 — kept verbatim as
-  :func:`kgforge.graph.level_stack_round_robin`), while its in-Excel
-  hierarchical parse (:1160-1182) uses the order-correct LEVEL STACK.
-  The level stack is what produced the reference's published Snowmobile
-  graph (1,543 distinct hasComponent edges — reproduced by
+  :func:`kgforge.graph.level_stack_round_robin`, which the gate checks
+  but no reader routes to), while its in-Excel hierarchical parse
+  (:1160-1182) uses the order-correct LEVEL STACK. The level stack is
+  what produced the reference's published Snowmobile graph (1,543
+  distinct hasComponent edges — reproduced by
   tests/test_snowmobile_golden.py), so this reader decodes
-  hierarchical CSVs with the stack;
+  hierarchical CSVs with the stack, always;
 - *simple parent-child* (:172-193): two columns found by synonym
   priority (:func:`resolve_edge_columns`), normalized, one edge per row.
 
@@ -95,20 +96,12 @@ def resolve_name_pair_columns(columns: Sequence[str]) -> tuple[str, str] | None:
     return None
 
 
-def read_bom_csv(
-    spark: SparkSession, path: str, hierarchical_mode: str = "stack"
-) -> DataFrame:
+def read_bom_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read a BOM edge CSV (file, directory, or glob) into deduplicated
     ``(parent, child)`` edges, routing by the sniffed header shape. All
     files under one path must share one header (one export family).
-
-    ``hierarchical_mode`` selects the decode for Number+Level files:
-    ``"stack"`` (default) is the order-correct level stack that produced
-    the reference's published Snowmobile graph; ``"roundrobin"`` is the
-    bit-compatible replay of the reference's *current* ``--bom`` code
-    path (``_parse_hierarchical_bom_csv`` :194-252, positional
-    assignment of level-L rows over level-(L-1) rows) for users
-    migrating from that flow.
+    Number+Level files are decoded with the order-correct level stack
+    (module docstring).
 
     Raises ``ValueError`` when neither shape matches — the caller
     decides whether to skip the input (the reference logs and returns
@@ -119,15 +112,7 @@ def read_bom_csv(
     lower = {str(c).strip().lower(): c for c in columns}
 
     if "number" in lower and "level" in lower:
-        levels = _read_hierarchical(spark, path, columns, lower)
-        if hierarchical_mode == "roundrobin":
-            # the reference's current --bom semantics, no dedup (:252
-            # returns the raw edge list; the importer's edge store dedups
-            # by MERGE)
-            return graph.level_stack_round_robin(levels).dropDuplicates()
-        if hierarchical_mode != "stack":  # pragma: no cover
-            raise ValueError(f"unknown hierarchical_mode {hierarchical_mode!r}")
-        return _decode_levels(levels).dropDuplicates()
+        return _decode_levels(_read_hierarchical(spark, path, columns, lower)).dropDuplicates()
 
     pair = resolve_edge_columns(columns)
     if pair is None:
@@ -310,7 +295,9 @@ def read_bom_csv_by_name(
 # rows) read once on the driver by the stdlib reader (kgforge.xlsx) and
 # parallelized into DataFrames; every set-level semantic (last-wins
 # overwrite, normalization, dedup, level-stack decode) runs IN SPARK so
-# the same operators serve a 10^12-row fact-side source unchanged.
+# the same operators serve a 10^12-row fact-side source unchanged. The
+# parts and BOM readers scan every sheet, as the reference's do; only a
+# link-sheet reader parses its one sheet.
 
 _PART_TYPE_TOKENS = (
     "MechanicalPart",
@@ -351,21 +338,12 @@ def _cells(t: xlsx.Table, row: list, columns: Sequence[str]) -> tuple:
     return tuple(_cell_str(t.get(row, c)) for c in columns)
 
 
-def _parsed(path: str | dict, sheets: list[str] | None) -> dict:
+def _parsed(path: str | dict, sheets: list[str] | None = None) -> dict:
     """The workbook readers' ``path``: an .xlsx path is parsed for the
-    requested sheets only (all by default); a workbook that
-    :func:`xlsx.read_workbook` already parsed is used as is, so one
-    parse can feed every reader (``pipeline.import_workbook``)."""
+    requested sheets only (all, in workbook order, by default); a
+    workbook that :func:`xlsx.read_workbook` already parsed is used as
+    is, so one parse can feed every reader (``pipeline.import_workbook``)."""
     return path if isinstance(path, dict) else xlsx.read_workbook(path, sheets=sheets)
-
-
-def _workbook_grids(path: str | dict, sheets: list[str] | None):
-    """``(sheet_name, grid)`` for the requested sheets (all, in workbook
-    order, by default); absent sheets are skipped."""
-    wb = _parsed(path, sheets)
-    for name in sheets or list(wb):
-        if name in wb:
-            yield name, wb[name]
 
 
 def _frame(grid: list[list]) -> xlsx.Table:
@@ -416,10 +394,7 @@ def _parts_table(grid: list[list], sniffed: bool = False) -> xlsx.Table | None:
 
 
 def read_excel_parts(
-    spark: SparkSession,
-    path: str | dict,
-    sheets: list[str] | None = None,
-    sniffed: bool = False,
+    spark: SparkSession, path: str | dict, sniffed: bool = False
 ) -> DataFrame:
     """S2: parts scan over every sheet of a workbook — the reference's
     ``SpreadsheetParser.parse_parts`` (spreadsheet_loader.py:54-111) as
@@ -448,7 +423,7 @@ def read_excel_parts(
     take the same.
     """
     rows: list[tuple] = []
-    for sheet_name, grid in _workbook_grids(path, sheets):
+    for sheet_name, grid in _parsed(path).items():
         t = _parts_table(grid, sniffed)
         if t is None:
             continue
@@ -479,9 +454,7 @@ def read_excel_parts(
     )
 
 
-def read_excel_bom_levels(
-    spark: SparkSession, path: str | dict, sheets: list[str] | None = None
-) -> DataFrame:
+def read_excel_bom_levels(spark: SparkSession, path: str | dict) -> DataFrame:
     """Hierarchical BOM rows from every workbook sheet with Number+Level
     columns (the reference's in-Excel hierarchical branch,
     generate_bom_from_excel :1160-1182, incl. its 'Action'-in-first-row
@@ -490,7 +463,7 @@ def read_excel_bom_levels(
     level-stack decode. Feed to :func:`kgforge.graph.level_stack_decode`
     (one sheet = one ordered group)."""
     rows: list[tuple] = []
-    for sheet_name, grid in _workbook_grids(path, sheets):
+    for sheet_name, grid in _parsed(path).items():
         t = _frame(grid)
         if t.rows:
             first = t.first_row_values()
@@ -518,13 +491,11 @@ def read_excel_bom_levels(
     )
 
 
-def read_excel_bom_edges(
-    spark: SparkSession, path: str | dict, sheets: list[str] | None = None
-) -> DataFrame:
+def read_excel_bom_edges(spark: SparkSession, path: str | dict) -> DataFrame:
     """Level-stack decode of :func:`read_excel_bom_levels` into
     deduplicated ``(parent, child)`` edges (generate_bom_from_excel's
     hierarchical branch + its edge dedup :1223)."""
-    return _decode_levels(read_excel_bom_levels(spark, path, sheets)).dropDuplicates()
+    return _decode_levels(read_excel_bom_levels(spark, path)).dropDuplicates()
 
 
 def _link_sheet(

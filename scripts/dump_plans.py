@@ -5,6 +5,14 @@ direct edge assembly, bucketed ANN with no cartesian product).
 
 Run: python scripts/dump_plans.py [sf_dir] (default sf0.001).
 
+``--suite TAG SF_DIR`` instead writes the formatted plan of every
+operator the ``bench.py`` suite times over ``SF_DIR``, one file per
+operator under ``plans/TAG/``. Run it on two checkouts with two tags
+and diff the directories to see what a change does to the suite's
+plans. The fixpoint loops (closure, connected components) run eagerly
+while their result is built, so they have no plan here; record their
+per-round plans with ``--executed``.
+
 ``--executed OUT_DIR KG_DIR DOCS_DIR`` instead records the final
 (post-AQE) physical plan of every query that ``run_pipeline`` (over
 ``KG_DIR``, the ``%20`` closure sample) and ``curate_corpus`` (over
@@ -32,6 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from kgforge import canonicalize, extract, fixtures, graph, linking, materialize  # noqa: E402
 from kgforge.datapipe import curate  # noqa: E402
 from kgforge.datapipe import dedup as dd  # noqa: E402
+from kgforge.datapipe import multimodal as mm  # noqa: E402
 from kgforge.datapipe import similarity as sim  # noqa: E402
 from kgforge.pipeline import run_pipeline  # noqa: E402
 from kgforge.session import get_spark  # noqa: E402
@@ -148,9 +157,63 @@ def executed(out_dir: str, kg_dir: str, docs_dir: str) -> None:
     spark.stop()
 
 
+def suite(tag: str, sf_dir: str) -> None:
+    spark = get_spark("kgforge-plans")
+    transcripts = fixtures.load_transcripts(spark, sf_dir)
+    entities = fixtures.load_entities(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    dupd = dd.docs_with_dups(docs)
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    mentions = extract.extract_mentions(transcripts)
+    linked = linking.link_mentions(mentions, entities, strategy="broadcast")
+    edges = graph.bom_edges_from_linked(linked)
+    triples = materialize.union_triples(
+        materialize.part_triples(entities),
+        materialize.bom_triples(edges),
+        materialize.used_in_triples(edges),
+    )
+    plans = {
+        "transcripts_scan": transcripts,
+        "extract_mentions": mentions,
+        "dict_mention_udf": extract.detect_mentions_dictionary(
+            transcripts, entities, engine="python"
+        ),
+        "dict_mention_auto": extract.detect_mentions_dictionary(transcripts, entities),
+        "link_broadcast": linked,
+        "link_salted": linking.link_mentions(mentions, entities, strategy="salted"),
+        "bom_edges": edges,
+        "triples_union": triples,
+        "ntriples_render": materialize.ntriples_lines(triples),
+        "triple_counts_agg": materialize.triple_counts(triples),
+        "top_assemblies": materialize.top_assemblies(edges),
+        "dedup_exact": dd.exact_dedup(dupd),
+        "dedup_minhash_lsh": dd.lsh_candidate_pairs(dupd),
+        "dedup_simhash": dd.simhash_near_dups(dupd),
+        "dedup_spans": dd.repeated_spans(dupd),
+        "ann_cosine_topk": sim.cosine_topk(queries, emb, k=5),
+        "embedding_near_dups_lsh": sim.embedding_near_dups(
+            sim.vecs_with_dups(emb), threshold=0.9
+        ),
+        "ann_ivf_topk": sim.ivf_ann_topk(queries, emb, k=5),
+        "multimodal_decode": mm.decode_features(mm.attach_media(docs)),
+        "multimodal_resize": mm.resize_images(mm.attach_media(docs), 8, 8),
+    }
+    out_dir = os.path.join("plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name, df in plans.items():
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(formatted(df))
+    print("wrote", len(plans), "plans to", out_dir)
+    spark.stop()
+
+
 def main() -> None:
     if sys.argv[1:2] == ["--executed"]:
         executed(*sys.argv[2:5])
+        return
+    if sys.argv[1:2] == ["--suite"]:
+        suite(*sys.argv[2:4])
         return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("kgforge-plans", cores=8, shuffle_partitions=8)

@@ -194,8 +194,8 @@ def test_dedup_clusters_close_pairs_transitively(spark, sf_dir):
     """Cluster dedup: candidate pairs close into connected components
     (A~B, B~C => one cluster even when the A~C pair was never emitted)
     and each cluster keeps exactly one doc — the longest text, doc_id
-    tiebreak. Verified against a driver-side union-find on the same
-    pairs."""
+    tiebreak — and is named by its minimum doc_id. Verified against a
+    driver-side union-find on the same pairs."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     # synthetic chain pairs: (i, i+1M) from clone injection plus a
     # second hop (i+1M, i+2M) -- transitive closure must merge all three
@@ -248,6 +248,8 @@ def test_dedup_clusters_close_pairs_transitively(spark, sf_dir):
         map(sorted, clusters.values())
     )
     for cid, members in got_clusters.items():
+        # the cluster id is the minimum member id by value
+        assert cid == min(members)
         want_keep = min(members, key=lambda d: (-len(texts[d]), d))
         assert keepers[cid] == want_keep
     # every 3-chain merged into ONE cluster of size 3
@@ -481,56 +483,3 @@ def test_curate_corpus_caches_stage_boundaries(spark, sf_dir):
     assert len(caches) == 1, [s.name() for s in stored]
     kept.unpersist()
     spark.catalog.clearCache()
-
-
-def test_curate_corpus_exact_mode_keeps_min_doc(spark, sf_dir):
-    from kgforge.datapipe import curate
-
-    docs = dd.docs_with_dups(_docs(spark, sf_dir))
-    kept, funnel = curate.curate_corpus(docs, dedup="exact")
-    ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    # every injected clone (id >= 1e6) loses to its original (min id)
-    assert not {i for i in ids if i >= 1000000}
-    assert funnel == [
-        {"stage": "dedup_exact", "n_in": docs.count(), "n_out": len(ids)}
-    ]
-
-
-def test_repeated_spans_min_total_matches_duckdb(spark, sf_dir):
-    """min_total mode (occurrence-count threshold, within-doc repeats
-    count) against the DuckDB oracle at a threshold the clone-injected
-    corpus makes selective."""
-    from tests.util import assert_df_matches_oracle
-
-    spans = dd.repeated_spans(dd.docs_with_dups(_docs(spark, sf_dir)), min_total=3)
-    oracle = """
-WITH docs_plus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
-),
-ptoks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks FROM docs_plus
-),
-pos_shingles AS (
-  SELECT doc_id, i - 1 AS pos,
-         array_to_string(toks[i : i + 2], ' ') AS shingle
-  FROM ptoks,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 3, 0) + 1)) AS i)
-  WHERE array_to_string(toks[i : i + 2], ' ') <> ''
-),
-rep AS (
-  SELECT shingle FROM pos_shingles GROUP BY shingle HAVING count(*) >= 3
-),
-islands AS (
-  SELECT doc_id, pos,
-         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM pos_shingles JOIN rep USING (shingle)
-)
-SELECT doc_id,
-       CAST(min(pos) AS BIGINT) AS span_start,
-       CAST(max(pos) + 2 AS BIGINT) AS span_end,
-       count(*) AS n_grams
-FROM islands GROUP BY doc_id, island
-"""
-    assert_df_matches_oracle(spans, oracle, sf_dir)

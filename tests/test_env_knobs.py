@@ -1,8 +1,7 @@
 """Guard: the only env-var knobs are the deployment settings read by
-``kgforge/session.py`` (cores, driver memory, local dir, worker
-warm-up). An operator that wants a tunable takes it as an
-argument from its caller, so no module elsewhere may read the process
-environment."""
+``kgforge/session.py`` (cores, driver memory, local dir). An operator
+that wants a tunable takes it as an argument from its caller, so no
+module elsewhere may read the process environment."""
 
 from __future__ import annotations
 

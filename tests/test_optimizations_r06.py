@@ -303,7 +303,7 @@ def test_spread_scan_returns_planned_exchange_unchanged_without_a_job(spark, sf_
 # ------------------------------------------------------- session warm-up
 
 
-def test_warm_up_failure_propagates(monkeypatch):
+def test_warm_up_failure_propagates():
     """A worker pool that cannot run the warm-up job must fail session
     start with its error, not look warm; the session is not marked
     warmed, so a retry warms again."""
@@ -321,7 +321,6 @@ def test_warm_up_failure_propagates(monkeypatch):
         def range(self, *args):
             raise RuntimeError("worker pool cannot start")
 
-    monkeypatch.delenv("KGFORGE_WARM_PYTHON", raising=False)
     with pytest.raises(RuntimeError, match="worker pool cannot start"):
         session._warm_python_workers(_Session(), 2)
     assert _Context.applicationId not in session._WARMED

@@ -37,6 +37,7 @@ LIBRARY_ONLY = {
     "connector.HttpNtriplesTransport": "K1",
     "connector.deliver_ntriples": "K1",
     "connector.deliver_cypher_batches": "K2",
+    "datapipe.dedup.minhash_signatures": "test oracle",
     "datapipe.dedup.simhash64": "test oracle",
     "datapipe.similarity.embedding_near_dups_exact": "test oracle",
     "normalize.normalize_part_number_py": "test oracle",
